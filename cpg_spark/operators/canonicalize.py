@@ -12,43 +12,10 @@ content-hash ids.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterutil import ckpt as _ckpt  # shared reliable-checkpoint switch
-
-# Convergence guard for the fixpoint loops below: past `max_iter` rounds
-# a warning is emitted but iteration CONTINUES (min-label propagation and
-# star-contraction are monotone, so the checksum fixpoint is guaranteed —
-# exiting early would silently return partial minima, i.e. WRONG
-# components, not just slow ones); at `max_iter * _HARD_CAP_FACTOR` a
-# RuntimeError stops a genuinely broken run.
-_HARD_CAP_FACTOR = 20
-
-
-def _iter_guard(rounds: int, max_iter: int, what: str) -> None:
-    if rounds == max_iter:
-        warnings.warn(
-            f"{what}: not converged after max_iter={max_iter} rounds; "
-            "continuing to the guaranteed fixpoint",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    if rounds >= max_iter * _HARD_CAP_FACTOR:
-        raise RuntimeError(
-            f"{what}: no fixpoint after {rounds} rounds "
-            f"(hard cap {max_iter} x {_HARD_CAP_FACTOR})"
-        )
-
-
-def _checksum(df: DataFrame) -> tuple[int, int]:
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+from .iterutil import ckpt, closure, counted, fixpoint
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -127,25 +94,21 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     driver_threshold: int = 10_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(member_id, component_id) for every node appearing in `edges`;
     component_id = lexicographic min member id.
 
     Edge sets up to `driver_threshold` run as driver-side union-find (a
     collect beats log(n) shuffle rounds); larger graphs run the
-    alternating-star loop, each iteration checkpointed (lineage
-    truncation — local by default, reliable when checkpoint_dir is given;
-    see _ckpt). Convergence = stable (count, checksum) of the edge set.
+    alternating-star loop, each iteration checkpointed (see iterutil).
+    Convergence = stable (count, checksum) of the edge set.
     """
-    e = _ckpt(
+    e, n_edges = counted(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
-    n_edges = e.count()
-    if 0 < n_edges <= driver_threshold:
+    if n_edges <= driver_threshold:
         return _unionfind_driver(e)
     # layout: AQE's partition coalescing already collapses each round's
     # tiny exchanges for dictionary-sized graphs, so the former explicit
@@ -153,33 +116,19 @@ def connected_components(
     # measured ~1s/run slower at 147k edges (r7); web-sized graphs keep
     # the session's width either way
 
-    all_nodes = _ckpt(
+    all_nodes = ckpt(
         e.select(F.col("u").alias("member_id"))
         .union(e.select(F.col("v").alias("member_id")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
-    if n_edges == 0:
-        return all_nodes.select(
-            "member_id", F.col("member_id").alias("component_id")
-        )
-
-    prev = None
-    rounds = 0
-    while True:
-        # lazy checkpoint: the checksum action both materializes the
-        # iteration (truncating lineage) and tests convergence — one
-        # driver round-trip per round instead of two
-        step = _small_star(_large_star(e))
-        e = _ckpt(step, checkpoint_dir, eager=False)
-        cur = _checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-        # count only NON-converged rounds, so converging exactly at the
-        # cap neither warns nor raises
-        rounds += 1
-        _iter_guard(rounds, max_iter, "connected_components star loop")
+    (e,) = fixpoint(
+        lambda s, _: (_small_star(_large_star(s[0])),),
+        (e,),
+        max_iter=max_iter,
+        what="connected_components star loop",
+        key=("u", "v"),
+        must_converge=True,
+    )
 
     # converged: e is a forest of depth-1 stars (u -> root), u > root;
     # min() guards against a node carrying two star edges at the cap
@@ -202,7 +151,6 @@ def bfs_reach(
     dst: str = "dst",
     max_hops: int = 20,
     honor_unreachable: bool = True,
-    checkpoint_dir: str | None = None,
     with_pred: bool = False,
 ) -> DataFrame:
     """All nodes reachable from `seeds` (column `node`) following edges
@@ -226,30 +174,31 @@ def bfs_reach(
     which refuses to follow EOG edges marked unreachable.
 
     Each round: frontier ⋈ edges → candidates, minus visited (anti-join),
-    checkpoint. Terminates when the frontier empties or max_hops. The
+    on iterutil.closure. Terminates when the frontier empties or
+    max_hops. The
     edge set is materialized ONCE up front (same as connected_components)
     — without this, every hop re-executes the edge table's upstream
     lineage (e.g. a tokenize/chunk kernel), multiplying the scan cost by
     the graph diameter."""
     if honor_unreachable and "unreachable" in edges.columns:
         edges = edges.filter(~F.coalesce(F.col("unreachable"), F.lit(False)))
-    edges = _ckpt(edges.select(src, dst), checkpoint_dir)
+    edges, n_edges = counted(edges.select(src, dst))
     # adaptive layout, same rationale as connected_components: a
     # metadata-sized graph must not pay full shuffle width times the
     # graph diameter in driver round-trips; a web-sized graph keeps the
     # session's width
     spark = edges.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    nparts = max(1, min(width, edges.count() // 50_000 + 1))
+    nparts = max(1, min(width, n_edges // 50_000 + 1))
     if nparts < width:
-        edges = _ckpt(edges.repartition(nparts, src), checkpoint_dir)
+        edges = ckpt(edges.repartition(nparts, src))
     seed_cols = [F.col("node"), F.lit(0).alias("hops")]
     if with_pred:
         node_type = edges.schema[src].dataType
         seed_cols.append(F.lit(None).cast(node_type).alias("pred"))
-    visited = _ckpt(seeds.select(*seed_cols), checkpoint_dir)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
+    seeds = ckpt(seeds.select(*seed_cols))
+
+    def hop(frontier, visited, h):
         if with_pred:
             cand = frontier.join(edges, frontier["node"] == edges[src]).select(
                 F.col(dst).alias("__nxt"), frontier["node"].alias("__p")
@@ -259,7 +208,7 @@ def bfs_reach(
                 .agg(F.min("__p").alias("pred"))
                 .withColumnRenamed("__nxt", "node")
                 .join(visited.select("node"), "node", "left_anti")
-                .select("node", F.lit(hop).alias("hops"), "pred")
+                .select("node", F.lit(h).alias("hops"), "pred")
             )
         else:
             nxt = (
@@ -267,16 +216,11 @@ def bfs_reach(
                 .select(F.col(dst).alias("node"))
                 .distinct()
                 .join(visited, "node", "left_anti")
-                .select("node", F.lit(hop).alias("hops"))
+                .select("node", F.lit(h).alias("hops"))
             )
-        nxt = _ckpt(nxt, checkpoint_dir)
-        if nxt.isEmpty():
-            break
-        # lazy truncation (r7): visited is only consumed by later plans;
-        # the eager nxt checkpoint above already bounds lineage
-        visited = _ckpt(visited.unionByName(nxt), checkpoint_dir, eager=False)
-        frontier = nxt
-    return visited
+        return nxt
+
+    return closure(hop, seeds, max_iter=max_hops, what="bfs_reach")
 
 
 def bfs_reach_grouped(
@@ -481,7 +425,6 @@ def scc(
     dst: str = "dst",
     max_iter: int = 50,
     driver_threshold: int = 10_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph:
     (member_id, component_id) for every node in `edges`, component_id =
@@ -498,78 +441,61 @@ def scc(
     root's SCC, so rounds ≤ longest chain of SCCs. All steps are joins +
     map-side-combinable min-aggregations; per-iteration checkpoint as in
     connected_components."""
-    e = _ckpt(
+    e, n_edges = counted(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
-    n_edges = e.count()
-    if 0 < n_edges <= driver_threshold:
+    if n_edges <= driver_threshold:
         return _tarjan_driver(e)
 
-    remaining = _ckpt(
+    remaining = ckpt(
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
-    if n_edges == 0:
-        return remaining.select(
-            F.col("node").alias("member_id"),
-            F.col("node").alias("component_id"),
-        )
 
-    done: DataFrame | None = None
-    er = e
-    outer_rounds = 0
-    while True:
-        if remaining.isEmpty():
-            break
-        # guard counts completed-but-unfinished rounds: finishing on
-        # round max_iter exits above without a spurious warn/raise
-        _iter_guard(outer_rounds, max_iter, "scc peel loop")
-        outer_rounds += 1
-        # (1) forward min-label propagation to fixpoint
-        color = _ckpt(
-            remaining.select("node", F.col("node").alias("color")), checkpoint_dir
-        )
-        prev = None
-        inner_rounds = 0
-        while True:
+    def peel(state, _):
+        remaining, er, done = state
+
+        def min_label(s, _):
+            (color,) = s
             incoming = (
                 er.join(
-                    color.select(
-                        F.col("node").alias("u"), F.col("color").alias("cu")
-                    ),
+                    color.select(F.col("node").alias("u"), F.col("color").alias("cu")),
                     "u",
                 )
                 .groupBy(F.col("v").alias("node"))
                 .agg(F.min("cu").alias("mc"))
             )
-            # lazy checkpoint: the checksum action materializes the
-            # iteration AND tests convergence — one round-trip per round
-            color = _ckpt(
+            return (
                 color.join(incoming, "node", "left").select(
                     "node",
-                    F.least(
-                        F.col("color"), F.coalesce("mc", "color")
-                    ).alias("color"),
+                    F.least(F.col("color"), F.coalesce("mc", "color")).alias("color"),
                 ),
-                checkpoint_dir,
-                eager=False,
             )
-            row = color.agg(
-                F.coalesce(F.bit_xor(F.xxhash64("node", "color")), F.lit(0))
-            ).collect()[0]
-            cur = int(row[0])
-            if cur == prev:
-                break
-            prev = cur
-            inner_rounds += 1
-            _iter_guard(inner_rounds, max_iter, "scc min-label propagation")
+
+        def back_reach(frontier, found, _):
+            return (
+                frontier.join(
+                    ec, (frontier["node"] == ec["v"]) & (frontier["color"] == ec["c"])
+                )
+                .select(F.col("u").alias("node"), F.col("c").alias("color"))
+                .distinct()
+                .join(found, ["node", "color"], "left_anti")
+            )
+
+        # (1) forward min-label propagation to fixpoint
+        (color,) = fixpoint(
+            min_label,
+            (remaining.select("node", F.col("node").alias("color")),),
+            max_iter=max_iter,
+            what="scc min-label propagation",
+            key=("node", "color"),
+            must_converge=True,
+        )
         # (2) backward reach of each root inside its color class
-        ec = (
+        ec = ckpt(
             er.join(
                 color.select(F.col("node").alias("u"), F.col("color").alias("c_u")),
                 "u",
@@ -581,43 +507,33 @@ def scc(
             .filter(F.col("c_u") == F.col("c_v"))
             .select("u", "v", F.col("c_u").alias("c"))
         )
-        ec = _ckpt(ec, checkpoint_dir)
-        found = _ckpt(
-            color.filter(F.col("node") == F.col("color")), checkpoint_dir
+        found = closure(
+            back_reach,
+            color.filter(F.col("node") == F.col("color")),
+            max_iter=max_iter,
+            what="scc backward reach",
+            must_converge=True,
         )
-        frontier = found
-        while True:
-            nxt = _ckpt(
-                frontier.join(
-                    ec,
-                    (frontier["node"] == ec["v"]) & (frontier["color"] == ec["c"]),
-                )
-                .select(F.col("u").alias("node"), F.col("c").alias("color"))
-                .distinct()
-                .join(found, ["node", "color"], "left_anti"),
-                checkpoint_dir,
-            )
-            if nxt.isEmpty():
-                break
-            found = _ckpt(found.unionByName(nxt), checkpoint_dir)
-            frontier = nxt
-        done_part = found.select(
-            F.col("node").alias("member_id"), F.col("color").alias("component_id")
-        )
-        done = done_part if done is None else done.unionByName(done_part)
-        done = _ckpt(done, checkpoint_dir)
         # (3) peel found SCCs off
         scc_nodes = found.select("node")
-        remaining = _ckpt(
-            remaining.join(scc_nodes, "node", "left_anti"), checkpoint_dir
-        )
-        er = _ckpt(
+        return (
+            remaining.join(scc_nodes, "node", "left_anti"),
             er.join(scc_nodes.select(F.col("node").alias("u")), "u", "left_anti")
             .join(scc_nodes.select(F.col("node").alias("v")), "v", "left_anti"),
-            checkpoint_dir,
+            done.unionByName(found),
         )
-    assert done is not None
-    return done
+
+    none = remaining.select("node", F.col("node").alias("color")).limit(0)
+    _, _, done = fixpoint(
+        peel,
+        (remaining, e, none),
+        max_iter=max_iter,
+        what="scc peel loop",
+        must_converge=True,
+    )
+    return done.select(
+        F.col("node").alias("member_id"), F.col("color").alias("component_id")
+    )
 
 
 def compress_chains(
@@ -625,7 +541,6 @@ def compress_chains(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 32,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Graph compression: contract chains of interior nodes (in-degree 1
     AND out-degree 1) into single edges — the CompressLLVMPass analog
@@ -637,51 +552,57 @@ def compress_chains(
     non-interior node, hops = 1 + number of contracted interior nodes.
     Pure cycles of interior nodes have no non-interior entry and drop
     out entirely (they are unreachable control flow, like an orphaned
-    basic-block loop). Pointer doubling: O(log chain-length) rounds."""
-    e = _ckpt(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
-        checkpoint_dir,
+    basic-block loop). Pointer doubling: O(log chain-length) rounds,
+    with f split into rows still landing on an interior node (`pend`)
+    and `done`. Chains strictly shrink `pend`; once its nodes stop
+    changing it holds only pure cycles, so the loop stops there."""
+    e = ckpt(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
     indeg = e.groupBy(F.col("dst").alias("node")).agg(F.count(F.lit(1)).alias("__in"))
     outdeg = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("__out"))
-    interior = _ckpt(
+    interior = ckpt(
         indeg.join(outdeg, "node")
         .filter((F.col("__in") == 1) & (F.col("__out") == 1))
-        .select("node"),
-        checkpoint_dir,
+        .select("node")
     )
     # f: for each interior node, where its (unique) outgoing edge lands
     # and how many steps that represents; doubling composes f with itself
-    f = _ckpt(
-        e.join(interior, e["src"] == interior["node"]).select(
-            F.col("src").alias("node"),
-            F.col("dst").alias("nxt"),
-            F.lit(1).cast("long").alias("steps"),
-        ),
-        checkpoint_dir,
+    f = e.join(interior, e["src"] == interior["node"]).select(
+        F.col("src").alias("node"),
+        F.col("dst").alias("nxt"),
+        F.lit(1).cast("long").alias("steps"),
     )
-    prev_pending: int | None = None
-    for _ in range(max_iter):
-        pending = f.join(interior, f["nxt"] == interior["node"], "left_semi")
-        n_pending = pending.count()
-        # chains strictly shrink the pending set each doubling; a constant
-        # pending set means only pure interior cycles remain — they are
-        # unreachable from every surviving (non-interior-src) edge, so
-        # stop instead of doubling `steps` to the iteration cap
-        if n_pending == 0 or (prev_pending is not None and n_pending >= prev_pending):
-            break
-        prev_pending = n_pending
-        g = f.select(
-            F.col("node").alias("__gn"), F.col("nxt").alias("__gx"), F.col("steps").alias("__gs")
-        )
-        f = _ckpt(
-            f.join(g, f["nxt"] == g["__gn"], "left").select(
+    lands_interior = interior.withColumnRenamed("node", "nxt")
+
+    def double(state, _):
+        pend, done = state
+
+        def compose(g: DataFrame) -> DataFrame:
+            g = g.select(
+                F.col("node").alias("__gn"),
+                F.col("nxt").alias("__gx"),
+                F.col("steps").alias("__gs"),
+            )
+            return pend.join(g, F.col("nxt") == F.col("__gn")).select(
                 "node",
-                F.coalesce("__gx", "nxt").alias("nxt"),
-                (F.col("steps") + F.coalesce("__gs", F.lit(0))).alias("steps"),
-            ),
-            checkpoint_dir,
-        )
+                F.col("__gx").alias("nxt"),
+                (F.col("steps") + F.col("__gs")).alias("steps"),
+            )
+
+        return compose(pend), done.unionByName(compose(done))
+
+    pend, done = fixpoint(
+        double,
+        (
+            f.join(lands_interior, "nxt", "left_semi"),
+            f.join(lands_interior, "nxt", "left_anti"),
+        ),
+        max_iter=max_iter,
+        what="compress_chains",
+        key=("node",),
+    )
+    f = done.unionByName(pend)
     starts = e.join(interior, e["src"] == interior["node"], "left_anti")
     fmap = f.select(
         F.col("node").alias("__fn"), F.col("nxt").alias("__fx"), F.col("steps").alias("__fs")

@@ -33,6 +33,8 @@ from .textstats import doc_tokens, has_min_tokens
 # MinHash family: h_k(x) = ((2k+1)*x + 1000003*k) mod P — odd multiplier,
 # distinct offsets, engine-portable int64-safe arithmetic
 MINHASH_K = 8
+# token n-gram width of every shingle path (the oracles fix it at 3)
+DEFAULT_SHINGLE_N = 3
 LSH_ROWS_PER_BAND = 2
 SIMHASH_BITS = 16
 
@@ -59,7 +61,7 @@ def exact_dup_map(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingle_hash_array(text: Column, n: int = 3) -> Column:
+def shingle_hash_array(text: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
     """array<long> of hashed token n-gram shingles (order-sensitive).
 
     r7 kernel: hash each TOKEN once, then compose per-shingle with the
@@ -101,7 +103,7 @@ def shingle_hash_array(text: Column, n: int = 3) -> Column:
 
 
 @lru_cache(maxsize=None)
-def _shingle_text_col(n: int = 3) -> Column:
+def _shingle_text_col(n: int = DEFAULT_SHINGLE_N) -> Column:
     """shingle_hash_array over col('text'), memoized per n. The kernel's
     Column tree is immutable and data-free (a pure code artifact), but
     BUILDING it costs ~0.5 s of py4j round trips per call — a fixed
@@ -112,13 +114,14 @@ def _shingle_text_col(n: int = 3) -> Column:
     return shingle_hash_array(F.col("text"), n)
 
 
-def shingle_index(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingle_index(docs: DataFrame, n: int = DEFAULT_SHINGLE_N) -> DataFrame:
     """Inverted-index rows (doc_id, lang, sh) — distinct shingle hashes
     per doc. Distinct-by-shuffle on purpose: the index feeds three
     consumers (both join sides + the size table), and the exchange is
     reused across them instead of re-hashing every shingle 3x. At 100 TB
     this is the step you materialize as its own table."""
-    assert n == 3, "shingle_hash_array is fixed at n=3 (oracle parity)"
+    if n != DEFAULT_SHINGLE_N:
+        raise ValueError(f"shingle_index is fixed at n={DEFAULT_SHINGLE_N}")
     return exploded_shingles(docs, keep=("lang",)).distinct()
 
 
@@ -129,7 +132,7 @@ def exploded_shingles(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     expression (which blows past the codegen method limit and falls back
     to interpreted evaluation — measured 25x slower)."""
     return docs.select(
-        "doc_id", *keep, F.explode(_shingle_text_col(3)).alias("sh")
+        "doc_id", *keep, F.explode(_shingle_text_col(DEFAULT_SHINGLE_N)).alias("sh")
     )
 
 
@@ -232,7 +235,7 @@ def _df_capped(idx: DataFrame, max_doc_freq: int) -> DataFrame:
 
 def jaccard_pairs(
     docs: DataFrame,
-    n: int = 3,
+    n: int = DEFAULT_SHINGLE_N,
     min_jaccard: float = 0.0,
     same_lang: bool = True,
     max_doc_freq: int | None = None,
@@ -254,9 +257,9 @@ def jaccard_pairs(
     # both self-join sides) — materialize it once (the index table a
     # full-scale run would snapshot) instead of re-running the shingle
     # kernel per consumer
-    idx = _ckpt(shingle_index(docs, n), None)
+    idx = _ckpt(shingle_index(docs, n))
     if max_doc_freq is not None:
-        idx = _ckpt(_df_capped(idx, max_doc_freq), None)
+        idx = _ckpt(_df_capped(idx, max_doc_freq))
     sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     left = idx.alias("l")
     right = idx.alias("r")
@@ -282,7 +285,7 @@ def jaccard_pairs(
 def jaccard_for_pairs(
     docs: DataFrame,
     pairs: DataFrame,
-    n: int = 3,
+    n: int = DEFAULT_SHINGLE_N,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard computed ONLY for the given candidate pairs
@@ -324,7 +327,7 @@ def jaccard_for_pairs(
         from .iterutil import ckpt as _ckpt_idx
 
         idx = _df_capped(
-            _ckpt_idx(shingle_index(docs, n).drop("lang"), None), max_doc_freq
+            _ckpt_idx(shingle_index(docs, n).drop("lang")), max_doc_freq
         )
         idx_c = idx.join(cand_ids, "doc_id", "left_semi")
     # r7 shape: intersection sizes via the candidate-CONFINED inverted
@@ -339,7 +342,7 @@ def jaccard_for_pairs(
     # instead of re-running the kernel per consumer.
     from .iterutil import ckpt as _ckpt
 
-    idx_c = _ckpt(idx_c, None)
+    idx_c = _ckpt(idx_c)
     sizes = idx_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a_sh = pairs.join(idx_c.withColumnRenamed("doc_id", "a"), "a")
     n_common = (
@@ -661,7 +664,7 @@ def anchor_chunk_dedup(
     # kernel (same contract as jaccard_for_pairs' confined index)
     from .iterutil import ckpt as _ckpt
 
-    chunks = _ckpt(chunks, None)
+    chunks = _ckpt(chunks)
 
     # combinable count + min(struct) + equi-join back on (fam, fp) — the
     # r6-verdict retrofit, replacing the (fam, fp) rank window; only

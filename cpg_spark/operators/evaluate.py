@@ -34,9 +34,8 @@ one map-side-combinable aggregation). Nodes fed by unresolvable inputs
 stay unevaluated; in evaluate_expressions so do nodes on cycles, while
 evaluate_expression_sets unrolls simple loop-carried counters into a
 bounded value set (the reference MultiValueEvaluator's
-handleSimpleLoopVariable, MAX_DEPTH=20). Iterations truncate lineage
-via the shared reliable-checkpoint switch (iterutil.ckpt): local in
-tests, checkpoint_dir on a cluster.
+handleSimpleLoopVariable, MAX_DEPTH=20). The rounds run on
+iterutil.fixpoint, which checkpoints every round.
 """
 
 from __future__ import annotations
@@ -44,13 +43,47 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterutil import ckpt as _ckpt
+from .iterutil import ckpt, fixpoint
 
 
 def _with_pos(edges: DataFrame) -> DataFrame:
     if "pos" in edges.columns:
         return edges
     return edges.withColumn("pos", F.lit(None).cast("int"))
+
+
+def _fold(
+    lits, nodes, edges, solve, max_rounds: int, what: str, unroll=None
+) -> DataFrame:
+    """The round loop both evaluators share. The state is (solved, vals,
+    pending) with the last round's `solved` not yet merged, so each round
+    derives all three frames from the previous round alone: merge, then
+    `solve(vals, pending)` for the nodes whose inputs are now all
+    evaluated. A round where that solves nothing tries `unroll(vals,
+    pending)` instead, when given. Stops when a round solves nothing or
+    after max_rounds."""
+    ops = nodes.filter(F.col("kind") == "op").select("node_id", "op")
+    arity = edges.groupBy(F.col("parent").alias("node_id")).agg(
+        F.count(F.lit(1)).alias("__n_args")
+    )
+
+    def round_with(f):
+        def round_(state, _):
+            solved, vals, pending = state
+            vals = vals.unionByName(solved)
+            pending = pending.join(solved.select("node_id"), "node_id", "left_anti")
+            return f(vals, pending), vals, pending
+
+        return round_
+
+    solved, vals, _ = fixpoint(
+        round_with(solve),
+        (lits, lits.limit(0), ckpt(ops.join(arity, "node_id"))),
+        max_iter=max_rounds,
+        what=what,
+        fallback=round_with(unroll) if unroll else None,
+    )
+    return vals.unionByName(solved)
 
 
 def _resolve_simple_loops(
@@ -194,7 +227,6 @@ def evaluate_expression_sets(
     max_rounds: int = 32,
     max_set_size: int = 32,
     max_loop_iters: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """MultiValueEvaluator analog (reference analysis/
     MultiValueEvaluator.kt:43-60 — when several paths define a value, the
@@ -220,24 +252,13 @@ def evaluate_expression_sets(
     continues downstream of the loop. Returns (node_id, vals
     array<double>, truncated)."""
     edges = _with_pos(edges)
-    vals = _ckpt(
-        nodes.filter(F.col("kind") == "lit")
-        .select(
-            "node_id",
-            F.array(F.col("value").cast("double")).alias("vals"),
-            F.lit(False).alias("truncated"),
-        ),
-        checkpoint_dir,
+    lits = nodes.filter(F.col("kind") == "lit").select(
+        "node_id",
+        F.array(F.col("value").cast("double")).alias("vals"),
+        F.lit(False).alias("truncated"),
     )
-    ops = nodes.filter(F.col("kind") == "op").select("node_id", "op")
-    arity = edges.groupBy(F.col("parent").alias("node_id")).agg(
-        F.count(F.lit(1)).alias("__n_args")
-    )
-    pending = _ckpt(ops.join(arity, "node_id"), checkpoint_dir)
 
-    for _ in range(max_rounds):
-        if pending.isEmpty():
-            break
+    def solve(vals: DataFrame, pending: DataFrame) -> DataFrame:
         child_vals = edges.join(
             vals.withColumnRenamed("node_id", "child"), "child"
         )
@@ -325,7 +346,7 @@ def evaluate_expression_sets(
                 ),
             )
         )
-        solved = _ckpt(
+        return (
             pending.join(ready, "node_id")
             .filter(F.col("__n_ready") == F.col("__n_args"))
             .select(
@@ -341,58 +362,31 @@ def evaluate_expression_sets(
                     (F.size("__set") > max_set_size)
                     | (F.col("__trunc_in") == 1)
                 ).alias("truncated"),
-            ),
-            checkpoint_dir,
-        )
-        if solved.isEmpty():
-            # acyclic progress stalled: try the reference's simple-loop
-            # unrolling before giving up (cycles otherwise stay
-            # unevaluated forever)
-            solved = _ckpt(
-                _resolve_simple_loops(
-                    vals, pending, edges, max_loop_iters, max_set_size
-                ),
-                checkpoint_dir,
             )
-            if solved.isEmpty():
-                break
-        # lazy truncation (r7): vals/pending are only consumed by the
-        # next round's plans — materializing them eagerly added two
-        # driver barriers per round; the eager `solved` checkpoint above
-        # (needed for the isEmpty probe) keeps lineage bounded
-        vals = _ckpt(vals.unionByName(solved), checkpoint_dir, eager=False)
-        pending = _ckpt(
-            pending.join(solved.select("node_id"), "node_id", "left_anti"),
-            checkpoint_dir,
-            eager=False,
         )
-    return vals
+
+    # acyclic progress stalled: try the reference's simple-loop
+    # unrolling before giving up (cycles otherwise stay unevaluated)
+    return _fold(
+        lits, nodes, edges, solve, max_rounds, "evaluate_expression_sets",
+        lambda v, p: _resolve_simple_loops(v, p, edges, max_loop_iters, max_set_size),
+    )
 
 
 def evaluate_expressions(
     nodes: DataFrame,
     edges: DataFrame,
     max_rounds: int = 32,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Returns (node_id, value) for every node whose value folds to a
     constant; unevaluable nodes (cycles, unknown ops, division by zero)
     are absent — the reference's cannotEvaluate result."""
     edges = _with_pos(edges)
-    vals = _ckpt(
-        nodes.filter(F.col("kind") == "lit")
-        .select("node_id", F.col("value").cast("double").alias("value")),
-        checkpoint_dir,
+    lits = nodes.filter(F.col("kind") == "lit").select(
+        "node_id", F.col("value").cast("double").alias("value")
     )
-    ops = nodes.filter(F.col("kind") == "op").select("node_id", "op")
-    arity = edges.groupBy(F.col("parent").alias("node_id")).agg(
-        F.count(F.lit(1)).alias("__n_args")
-    )
-    pending = _ckpt(ops.join(arity, "node_id"), checkpoint_dir)
 
-    for _ in range(max_rounds):
-        if pending.isEmpty():
-            break
+    def solve(vals: DataFrame, pending: DataFrame) -> DataFrame:
         ready = (
             edges.join(vals.withColumnRenamed("node_id", "child"), "child")
             .groupBy(F.col("parent").alias("node_id"))
@@ -426,7 +420,7 @@ def evaluate_expressions(
         )
         a, b, c = F.col("__a"), F.col("__b"), F.col("__c")
         bool_d = lambda cc: cc.cast("double")  # noqa: E731
-        solved = _ckpt(
+        return (
             pending.join(ready, "node_id")
             .filter(F.col("__n_ready") == F.col("__n_args"))
             .select(
@@ -466,19 +460,7 @@ def evaluate_expressions(
                 )
                 .alias("value"),
             )
-            .filter(F.col("value").isNotNull()),
-            checkpoint_dir,
+            .filter(F.col("value").isNotNull())
         )
-        if solved.isEmpty():
-            break
-        # lazy truncation (r7): vals/pending are only consumed by the
-        # next round's plans — materializing them eagerly added two
-        # driver barriers per round; the eager `solved` checkpoint above
-        # (needed for the isEmpty probe) keeps lineage bounded
-        vals = _ckpt(vals.unionByName(solved), checkpoint_dir, eager=False)
-        pending = _ckpt(
-            pending.join(solved.select("node_id"), "node_id", "left_anti"),
-            checkpoint_dir,
-            eager=False,
-        )
-    return vals
+
+    return _fold(lits, nodes, edges, solve, max_rounds, "evaluate_expressions")

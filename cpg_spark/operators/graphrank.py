@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import char_poly_hash_col
+from .iterutil import ckpt
 
 
 def _ordered_sum(key: str, val: str) -> Column:
@@ -78,8 +79,6 @@ def pagerank(
     weight_col: str | None = None,
     ordered: bool = True,
     ordered_salts: int = 16,
-    cache_static: bool = True,
-    checkpoint_dir: str | None = None,
     truncate_lineage: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over edges(src, dst[, weight]), fixed n_iter
@@ -108,16 +107,16 @@ def pagerank(
     bit-exactly — pytest-asserted). The dangling-mass fold is salted
     the same way.
 
-    cache_static (default on) persists the edge and node frames once:
-    every iteration re-reads them, and without the cache a deep edge
+    The edge and node frames are cached once (outside the plan-audit
+    mode below): every iteration re-reads them, and without the cache a deep edge
     lineage (e.g. edges derived from a full extract->cooccur plan)
     re-executes per iteration — the EdgeCachePass analog. On a real
     cluster this stage is a materialized snapshot instead. Caching does
     not change values, only lineage.
 
     Each iteration's ranks frame is lineage-truncated (the repo-wide
-    iterutil contract: localCheckpoint, or reliable checkpoint under
-    `checkpoint_dir` on a cluster) — the update reads ranks TWICE
+    iterutil contract: localCheckpoint, or a reliable checkpoint when
+    the context has a checkpoint directory) — the update reads ranks TWICE
     (contributions + dangling mass), so without truncation the plan
     doubles per iteration. truncate_lineage=False is the PLAN-AUDIT
     mode only: it skips both the checkpoints and the static caches so
@@ -125,13 +124,7 @@ def pagerank(
     that way — the doubling is real).
 
     Returns (node, rank)."""
-    from .iterutil import ckpt as _ckpt_impl
-
-    if truncate_lineage:
-        ckpt = _ckpt_impl
-    else:
-        cache_static = False
-        ckpt = lambda df, _dir, eager=True: df  # noqa: E731
+    ck = ckpt if truncate_lineage else (lambda df: df)
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
@@ -154,23 +147,15 @@ def pagerank(
         "node",
         "left",
     ).select("node", F.col("__has_out").isNull().alias("__dang"))
-    if cache_static:
+    if truncate_lineage:
         e = e.cache()
         nodes = nodes.cache()
     n = nodes.count()
     teleport = (F.lit(1.0) - F.lit(damping)) / F.lit(n)
-    # r7: intermediate checkpoints are LAZY — each still truncates
-    # lineage and computes exactly once when first consumed, but the
-    # five iterations execute as one job instead of five (no per-round
-    # driver barrier; measured 5.5s -> 4.6s on the 81k-node graph).
-    # Only the final ranks materialize eagerly, so the statics are
-    # still cached while anything computes and unpersist stays sound.
-    ranks = ckpt(
-        nodes.select("node", "__dang", (F.lit(1.0) / F.lit(n)).alias("rank")),
-        checkpoint_dir,
-        eager=(n_iter == 0 and cache_static),
+    ranks = ck(
+        nodes.select("node", "__dang", (F.lit(1.0) / F.lit(n)).alias("rank"))
     )
-    for it in range(n_iter):
+    for _ in range(n_iter):
         contribs = e.join(
             ranks.select(F.col("node").alias("__s"), "rank"), "__s"
         ).select(
@@ -191,7 +176,7 @@ def pagerank(
             dangling = dang_ranks.agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
             )
-        ranks = ckpt(
+        ranks = ck(
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -206,11 +191,9 @@ def pagerank(
                     )
                 ).alias("rank"),
             ),
-            checkpoint_dir,
-            eager=(it == n_iter - 1 and cache_static),
         )
-    if cache_static:
-        # the returned ranks frame is already (eagerly) checkpointed and
+    if truncate_lineage:
+        # the returned ranks frame is already checkpointed and
         # no longer depends on the statics — release them so repeated
         # calls in a long-lived session don't leak cached partitions
         for df in (e, nodes):
@@ -226,8 +209,6 @@ def hits(
     weight_col: str | None = None,
     ordered: bool = True,
     ordered_salts: int = 16,
-    cache_static: bool = True,
-    checkpoint_dir: str | None = None,
     truncate_lineage: bool = True,
 ) -> DataFrame:
     """Weighted HITS (Kleinberg 1999) over edges(src, dst[, weight]),
@@ -253,13 +234,7 @@ def hits(
     squares and quotient), the iterutil contract.
 
     Returns (node, authority, hub) for every node of either side."""
-    from .iterutil import ckpt as _ckpt_impl
-
-    if truncate_lineage:
-        ckpt = _ckpt_impl
-    else:
-        cache_static = False
-        ckpt = lambda df, _dir: df  # noqa: E731
+    ck = ckpt if truncate_lineage else (lambda df: df)
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
@@ -269,7 +244,7 @@ def hits(
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
     )
-    if cache_static:
+    if truncate_lineage:
         e = e.cache()
         nodes = nodes.cache()
 
@@ -308,7 +283,7 @@ def hits(
         if truncate_lineage:
             summed = summed.cache()
         norm = _norm_scalar(summed, "__u")
-        out = ckpt(
+        out = ck(
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(norm))
             .select(
@@ -318,7 +293,6 @@ def hits(
                     F.coalesce(F.col("__u"), F.lit(0.0)) / F.col("__norm"),
                 ).otherwise(F.lit(0.0)).alias("score"),
             ),
-            checkpoint_dir,
         )
         if truncate_lineage:
             summed.unpersist()
@@ -345,8 +319,8 @@ def hits(
             F.coalesce("hub", F.lit(0.0)).alias("hub"),
         )
     )
-    out = ckpt(out, checkpoint_dir)
-    if cache_static:
+    out = ck(out)
+    if truncate_lineage:
         for df in (e, nodes):
             df.unpersist()
     return out
@@ -359,8 +333,6 @@ def label_propagation(
     dst_col: str = "dst",
     weight_col: str | None = None,
     symmetric: bool = False,
-    cache_static: bool = True,
-    checkpoint_dir: str | None = None,
     truncate_lineage: bool = True,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al.
@@ -390,13 +362,7 @@ def label_propagation(
     symmetric already — leave it off there).
 
     Returns (node, label); label is the community id."""
-    from .iterutil import ckpt as _ckpt_impl
-
-    if truncate_lineage:
-        ckpt = _ckpt_impl
-    else:
-        cache_static = False
-        ckpt = lambda df, _dir: df  # noqa: E731
+    ck = ckpt if truncate_lineage else (lambda df: df)
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"),
@@ -413,7 +379,7 @@ def label_propagation(
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
     )
-    if cache_static:
+    if truncate_lineage:
         e = e.cache()
         nodes = nodes.cache()
     labels = nodes.select("node", F.col("node").alias("lbl"))
@@ -428,15 +394,13 @@ def label_propagation(
                 "__b"
             )
         ).select("node", F.col("__b.lbl").alias("__new"))
-        labels = ckpt(
+        labels = ck(
             labels.join(best, "node", "left").select(
                 "node", F.coalesce("__new", "lbl").alias("lbl")
             ),
-            checkpoint_dir,
         )
-    labels = ckpt(labels.select("node", F.col("lbl").alias("label")),
-                  checkpoint_dir)
-    if cache_static:
+    labels = ck(labels.select("node", F.col("lbl").alias("label")))
+    if truncate_lineage:
         for df in (e, nodes):
             df.unpersist()
     return labels
@@ -623,8 +587,6 @@ def kcore(
     n_rounds: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    cache_static: bool = True,
-    checkpoint_dir: str | None = None,
     truncate_lineage: bool = True,
 ) -> DataFrame:
     """k-core membership by synchronous peeling (Seidman 1983; the
@@ -656,13 +618,7 @@ def kcore(
     and the join below would crash on deg=None — r6 ADVICE finding)."""
     if n_rounds < 1:
         raise ValueError("kcore requires n_rounds >= 1")
-    from .iterutil import ckpt as _ckpt_impl
-
-    if truncate_lineage:
-        ckpt = _ckpt_impl
-    else:
-        cache_static = False
-        ckpt = lambda df, _dir: df  # noqa: E731
+    ck = ckpt if truncate_lineage else (lambda df: df)
     und = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
@@ -675,7 +631,7 @@ def kcore(
         und.select(F.col("b").alias("w"), F.col("a").alias("x"))
     )
     nodes = adj.select(F.col("w").alias("node")).distinct()
-    if cache_static:
+    if truncate_lineage:
         adj = adj.cache()
         nodes = nodes.cache()
     alive = nodes
@@ -687,7 +643,7 @@ def kcore(
         deg = both.groupBy(F.col("w").alias("node")).agg(
             F.count(F.lit(1)).cast("long").alias("core_deg")
         )
-        deg = ckpt(deg, checkpoint_dir)
+        deg = ck(deg)
         alive = deg.filter(F.col("core_deg") >= k).select("node")
     out = (
         nodes.join(
@@ -702,8 +658,8 @@ def kcore(
             ).otherwise(F.lit(0)).cast("long").alias("core_deg"),
         )
     )
-    out = ckpt(out, checkpoint_dir)
-    if cache_static:
+    out = ck(out)
+    if truncate_lineage:
         for df in (adj, nodes):
             df.unpersist()
     return out

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import inferred_id_col
-from .iterutil import ckpt as _ckpt
+from .iterutil import closure
 
 
 def best_alias_dict(alias_dict: DataFrame) -> DataFrame:
@@ -59,9 +59,7 @@ def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     )
 
 
-def scope_ancestors(
-    scopes: DataFrame, max_depth: int = 32, checkpoint_dir: str | None = None
-) -> DataFrame:
+def scope_ancestors(scopes: DataFrame, max_depth: int = 32) -> DataFrame:
     """Reflexive-transitive parent closure of the scope tree:
     (scope_id, ancestor_id, dist) with dist 0 = the scope itself.
 
@@ -69,33 +67,28 @@ def scope_ancestors(
     (ScopeManager.kt:625-653 `resolve` loops `scope = scope.parent`);
     precomputing the closure once turns that per-row walk into a single
     equi-join — the scope tree is metadata-sized next to the mention
-    stream. Iterative frontier joins, bounded by max_depth; iterations
-    truncate lineage via the shared reliable-checkpoint switch
-    (local in tests, checkpoint_dir on a cluster)."""
+    stream. Iterative frontier joins, bounded by max_depth
+    (iterutil.closure)."""
     anc = scopes.select(
         "scope_id", F.col("scope_id").alias("ancestor_id"), F.lit(0).alias("dist")
     )
     parents = scopes.select(
         F.col("scope_id").alias("__s"), F.col("parent_scope_id").alias("__p")
     ).filter(F.col("__p").isNotNull())
-    frontier = _ckpt(
+    return anc.unionByName(closure(
+        lambda frontier, _, i: frontier.join(
+            parents, F.col("ancestor_id") == F.col("__s")
+        ).select(
+            "scope_id", F.col("__p").alias("ancestor_id"), F.lit(i + 1).alias("dist")
+        ),
         parents.select(
             F.col("__s").alias("scope_id"),
             F.col("__p").alias("ancestor_id"),
             F.lit(1).alias("dist"),
         ),
-        checkpoint_dir,
-    )
-    for d in range(2, max_depth + 1):
-        if frontier.isEmpty():
-            break
-        anc = anc.unionByName(frontier)
-        frontier = _ckpt(
-            frontier.join(parents, frontier["ancestor_id"] == parents["__s"])
-            .select("scope_id", F.col("__p").alias("ancestor_id"), F.lit(d).alias("dist")),
-            checkpoint_dir,
-        )
-    return anc.unionByName(frontier) if not frontier.isEmpty() else anc
+        max_iter=max_depth - 1,
+        what="scope_ancestors",
+    ))
 
 
 def resolve_scoped(
@@ -104,7 +97,6 @@ def resolve_scoped(
     scopes: DataFrame,
     max_depth: int = 32,
     infer_missing: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Scope-chain reference resolution: each ref (scope_id, name) binds
     to the declaration of the same name in the NEAREST enclosing scope —
@@ -124,7 +116,7 @@ def resolve_scoped(
     Shape: refs ⋈ ancestor-closure ⋈ decls, then a window picking
     min dist (deterministic tie-break on decl_scope); the inferred
     branch is one anti-join."""
-    anc = scope_ancestors(scopes, max_depth, checkpoint_dir)
+    anc = scope_ancestors(scopes, max_depth)
     d = decls.select(
         F.col("scope_id").alias("decl_scope"), F.col("name").alias("__dname")
     )
@@ -183,7 +175,6 @@ def resolve_imports(
     supertypes: DataFrame,
     max_depth: int = 16,
     infer_missing: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Import resolution with wildcard expansion — the full ImportResolver
     (reference passes/ImportResolver.kt:51-100): a specific import
@@ -224,7 +215,6 @@ def resolve_imports(
             F.col("supertype").alias("parent_scope_id"),
         ).distinct(),
         max_depth,
-        checkpoint_dir,
     ).select(
         F.col("scope_id").alias("__base"), F.col("ancestor_id").alias("__owner")
     ).distinct()

@@ -33,10 +33,17 @@ def _lit_double_array(vals) -> Column:
     reads it back with correctly-rounded parsing — the resulting
     doubles are bit-identical to F.lit(v)."""
     vs = [float(v) for v in vals]
-    assert all(math.isfinite(v) for v in vs), "finite doubles only"
+    if not all(math.isfinite(v) for v in vs):
+        raise ValueError("finite doubles only")
     return F.expr(
         "array(" + ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in vs) + ")"
     )
+
+
+def _require_ids(what: str, wanted, found) -> None:
+    missing = [i for i in wanted if i not in found]
+    if missing:
+        raise ValueError(f"{what} ids must exist in the corpus: missing {missing}")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -379,7 +386,8 @@ def kmeans_fit(
         .select("embedding")
         .collect()
     ]
-    assert len(cents) == k, "seed ids must exist"
+    if len(cents) != k:
+        raise ValueError("seed ids must exist")
     e = F.col("embedding")
 
     def _seq_fold(sort_key: Column, val: Column) -> Column:
@@ -486,7 +494,8 @@ def pq_codebook_from_seeds(
     subspace for a trained codebook; the encode/ADC path below is
     identical either way). Returns m × k × (dim/m) plain lists
     (broadcast-literal sized: k·dim doubles)."""
-    assert dim % m == 0, "dim must divide into m subspaces"
+    if dim % m:
+        raise ValueError("dim must divide into m subspaces")
     sub = dim // m
     rows = {
         r[0]: [float(x) for x in r[1]]
@@ -494,8 +503,7 @@ def pq_codebook_from_seeds(
         .select(id_col, "embedding")
         .collect()
     }
-    missing = [i for i in seed_ids if i not in rows]
-    assert not missing, f"seed ids must exist in the corpus: missing {missing}"
+    _require_ids("seed", seed_ids, rows)
     seeds = [rows[i] for i in seed_ids]
     return [
         [v[s * sub : (s + 1) * sub] for v in seeds] for s in range(m)
@@ -526,7 +534,8 @@ def pq_codebook_trained(
     doubles per round the simple composition is already
     broadcast-literal sized. Drop-in for the encode/ADC path: returns
     the same m × k × (dim/m) plain lists."""
-    assert dim % m == 0, "dim must divide into m subspaces"
+    if dim % m:
+        raise ValueError("dim must divide into m subspaces")
     sub = dim // m
     return [
         kmeans_fit(
@@ -620,7 +629,8 @@ def pq_adc_topk(
     cross-query neighbors stay reachable and recall@k against the
     brute-force truth measures quantization error alone. One window
     for the per-query top-k. Returns (q_id, rank, neighbor_id, dist)."""
-    assert query_ids, "query_ids must be non-empty"
+    if not query_ids:
+        raise ValueError("query_ids must be non-empty")
     m = len(codebook)
     sub = dim // m
     q_rows = {
@@ -629,8 +639,7 @@ def pq_adc_topk(
         .select(id_col, "embedding")
         .collect()
     }
-    missing = [i for i in query_ids if i not in q_rows]
-    assert not missing, f"query ids must exist in the corpus: missing {missing}"
+    _require_ids("query", query_ids, q_rows)
     codes = pq_encode(emb, codebook, dim, id_col)
 
     per_query = []
@@ -709,7 +718,8 @@ def ivfpq_topk(
     degenerating to residual-PQ ADC over the whole corpus."""
     import math
 
-    assert query_ids and centroid_ids
+    if not (query_ids and centroid_ids):
+        raise ValueError("query_ids and centroid_ids must be non-empty")
     m = len(codebook)
     sub = dim // m
     cents = {
@@ -718,8 +728,7 @@ def ivfpq_topk(
         .select(id_col, "embedding")
         .collect()
     }
-    missing = [c for c in centroid_ids if c not in cents]
-    assert not missing, f"centroid ids must exist: missing {missing}"
+    _require_ids("centroid", centroid_ids, cents)
     cell_order = list(centroid_ids)
 
     # --- corpus: assign (combinable argmax by cosine), residual, encode
@@ -769,8 +778,7 @@ def ivfpq_topk(
         .select(id_col, "embedding")
         .collect()
     }
-    missing = [q for q in query_ids if q not in q_rows]
-    assert not missing, f"query ids must exist: missing {missing}"
+    _require_ids("query", query_ids, q_rows)
 
     def _cos_py(a, b):
         d = 0.0
@@ -909,15 +917,15 @@ def sq8_adc_topk(
     query excludes only itself, so recall against the brute-force
     truth measures quantization error alone (the pq_adc_topk
     contract). Returns (q_id, rank, neighbor_id, dist)."""
-    assert query_ids, "query_ids must be non-empty"
+    if not query_ids:
+        raise ValueError("query_ids must be non-empty")
     q_rows = {
         r[0]: [float(x) for x in r[1]]
         for r in emb.filter(F.col(id_col).isin(query_ids))
         .select(id_col, "embedding")
         .collect()
     }
-    missing = [i for i in query_ids if i not in q_rows]
-    assert not missing, f"query ids must exist in the corpus: missing {missing}"
+    _require_ids("query", query_ids, q_rows)
     trained = sq8_train(emb, dim, id_col)
     enc = emb.crossJoin(F.broadcast(trained)).select(
         F.col(id_col).alias("neighbor_id"),

@@ -153,7 +153,6 @@ def productions_from_dfg(
     nodes: DataFrame,
     edges: DataFrame,
     hotspots: DataFrame,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """createGrammar analog (reference cpg-analysis grammar creation from
     the backward DFG slice of a hotspot): turn a string-building DFG into
@@ -176,25 +175,24 @@ def productions_from_dfg(
     Nonterminals are remapped so the hotspot node is nt 0, the start
     convention grammar_patterns expects; feed the output straight into
     grammar_patterns for approximation + regex synthesis."""
-    from .iterutil import ckpt as _ckpt
+    from .iterutil import closure
 
     rev = edges.select(F.col("parent").alias("r_src"), F.col("child").alias("r_dst"))
-    labels = hotspots.select("hotspot_id", F.col("node_id").alias("node"))
-    frontier = labels
-    for _ in range(64):
-        nxt = _ckpt(
-            frontier.join(rev, frontier["node"] == rev["r_src"])
+
+    def back(frontier, seen, _):
+        return (
+            frontier.join(rev, F.col("node") == F.col("r_src"))
             .select("hotspot_id", F.col("r_dst").alias("node"))
             .distinct()
-            .join(labels, ["hotspot_id", "node"], "left_anti"),
-            checkpoint_dir,
+            .join(seen, ["hotspot_id", "node"], "left_anti")
         )
-        if nxt.isEmpty():
-            break
-        # lazy truncation (r7): labels is only consumed by later plans;
-        # the eager nxt checkpoint above already bounds lineage
-        labels = _ckpt(labels.unionByName(nxt), checkpoint_dir, eager=False)
-        frontier = nxt
+
+    labels = closure(
+        back,
+        hotspots.select("hotspot_id", F.col("node_id").alias("node")),
+        max_iter=64,
+        what="productions_from_dfg",
+    )
 
     # nt remap: the hotspot node itself -> 0, every other node -> id + 1
     hot = hotspots.select(

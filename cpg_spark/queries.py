@@ -1077,8 +1077,7 @@ def q_eog_corpus_reach(spark, sf_dir):
         docs.filter(textstats.has_min_tokens(F.col("text"))).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             _chunk_info(F.col("text"), 10).alias("ci"),
-        ),
-        None,
+        )
     )
     chunks = docs_ci.select(
         "doc_id",
@@ -1269,8 +1268,7 @@ def q_eog_dfa_branched(spark, sf_dir):
         docs.filter(textstats.has_min_tokens(F.col("text"))).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             _chunk_info(F.col("text"), 10).alias("ci"),
-        ),
-        None,
+        )
     )
     chunks = docs_ci.select(
         "doc_id", F.posexplode("ci").alias("chunk_idx", "c")
@@ -2708,7 +2706,7 @@ def q_ts_weighted_sample(spark, sf_dir):
     # into the single-split scan, re-running the quality kernel
     # single-task (the filter-on-computed rule)
     docs = t_par(spark, sf_dir, "documents")
-    q = _ckpt(textstats.quality_score(docs).select("doc_id", "quality"), None)
+    q = _ckpt(textstats.quality_score(docs).select("doc_id", "quality"))
     out = weighted_sample(
         q, key_col="doc_id", weight_col="quality", temperature=2, salt="wq"
     )

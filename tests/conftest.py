@@ -16,6 +16,16 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def restore_checkpoint_dir(spark):
+    """For a test that gives the context a checkpoint directory: put
+    the context back to no directory afterwards, so later tests stay on
+    localCheckpoint."""
+    yield
+    sc = spark.sparkContext
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
 @pytest.fixture(scope="session")
 def corpus():
     return synth.make_corpus(40)

@@ -214,17 +214,19 @@ def test_flag_unreachable_and_bfs_skip(spark):
 # --- reliable checkpointing --------------------------------------------------
 
 
-def test_reliable_checkpoint_converges_identically(spark, tmp_path):
-    """checkpoint_dir swaps localCheckpoint for reliable checkpoint();
-    the star loop and SCC must converge to identical results."""
+def test_reliable_checkpoint_converges_identically(
+    spark, tmp_path, restore_checkpoint_dir
+):
+    """A context checkpoint directory swaps localCheckpoint for reliable
+    checkpoint(); the star loop must converge to identical results."""
     edges = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(23)]
     df = spark.createDataFrame(edges, "src string, dst string")
     base = {r["member_id"]: r["component_id"]
             for r in connected_components(df, driver_threshold=0).collect()}
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
     rel = {r["member_id"]: r["component_id"]
-           for r in connected_components(
-               df, driver_threshold=0, checkpoint_dir=str(tmp_path / "ck")
-           ).collect()}
+           for r in connected_components(df, driver_threshold=0).collect()}
+    assert any((tmp_path / "ck").iterdir())  # the rounds went to this dir
     assert base == rel == {f"n{i:03d}": "n000" for i in range(24)}
 
 

@@ -201,21 +201,19 @@ def test_evaluate_sets_ordered_ops(spark):
     assert out[13] == [1.0, 4.0, 9.0]
 
 
-def test_evaluate_checkpoint_dir_equivalence(spark, tmp_path):
-    """Reliable-checkpoint switch produces identical results to the
-    localCheckpoint default (the canonicalize equivalence pattern)."""
+def test_evaluate_checkpoint_dir_equivalence(spark, tmp_path, restore_checkpoint_dir):
+    """A context checkpoint directory (reliable checkpoints) produces
+    identical results to the localCheckpoint default (the canonicalize
+    equivalence pattern)."""
     nodes = spark.createDataFrame(
         [(0, "lit", 3.0, None), (1, "lit", 4.0, None), (10, "op", None, "add")],
         "node_id long, kind string, value double, op string",
     )
     edges = spark.createDataFrame([(0, 10), (1, 10)], "child long, parent long")
     base = {r["node_id"]: r["value"] for r in evaluate_expressions(nodes, edges).collect()}
-    ck = {
-        r["node_id"]: r["value"]
-        for r in evaluate_expressions(
-            nodes, edges, checkpoint_dir=str(tmp_path / "ck")
-        ).collect()
-    }
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+    ck = {r["node_id"]: r["value"] for r in evaluate_expressions(nodes, edges).collect()}
+    assert any((tmp_path / "ck").iterdir())
     assert base == ck == {0: 3.0, 1: 4.0, 10: 7.0}
 
 

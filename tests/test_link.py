@@ -199,8 +199,11 @@ def test_resolve_scoped_infer_missing(spark):
     assert inf["inferred_id"] == inferred_id_py("ghost")
 
 
-def test_scope_ancestors_checkpoint_dir_equivalence(spark, tmp_path):
-    """Reliable-checkpoint switch matches the localCheckpoint default."""
+def test_scope_ancestors_checkpoint_dir_equivalence(
+    spark, tmp_path, restore_checkpoint_dir
+):
+    """A context checkpoint directory (reliable checkpoints) matches the
+    localCheckpoint default."""
     from cpg_spark.operators.link import scope_ancestors
 
     scopes = spark.createDataFrame(
@@ -208,12 +211,9 @@ def test_scope_ancestors_checkpoint_dir_equivalence(spark, tmp_path):
         "scope_id long, parent_scope_id long",
     )
     base = sorted(map(tuple, scope_ancestors(scopes).collect()))
-    ck = sorted(
-        map(
-            tuple,
-            scope_ancestors(scopes, checkpoint_dir=str(tmp_path / "ck")).collect(),
-        )
-    )
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+    ck = sorted(map(tuple, scope_ancestors(scopes).collect()))
+    assert any((tmp_path / "ck").iterdir())
     assert base == ck and (4, 1, 3) in base
 
 

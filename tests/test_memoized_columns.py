@@ -81,8 +81,18 @@ def test_lit_double_array_bit_exact(spark):
 
 
 def test_lit_double_array_rejects_non_finite():
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError):
         similarity._lit_double_array([1.0, float("inf")])
+
+
+def test_pq_codebook_rejects_missing_seed_id(spark):
+    """Caller-supplied ids are checked with a raise, not an assert, so
+    the check survives python -O."""
+    emb = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match=r"missing \[3\]"):
+        similarity.pq_codebook_from_seeds(emb, [1, 3], m=1, dim=2)
 
 
 def test_scan_cache_hits_and_invalidation(spark, tmp_path):
