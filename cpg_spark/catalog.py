@@ -11,7 +11,9 @@ try_iceberg_catalog().
 
 Layout:
     warehouse/<table>/snap-<id>/        parquet files
-    warehouse/<table>/snap-<id>.json    manifest (committed marker)
+    warehouse/<table>/snap-<id>.json    manifest (committed marker; carries
+                                        the frame's schema, so a read
+                                        needs no footer inference)
     warehouse/<table>/current.json      pointer, replaced atomically
 
 A snapshot is visible iff its manifest exists AND current.json points at
@@ -28,6 +30,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotCatalog:
@@ -63,7 +66,9 @@ class SnapshotCatalog:
         m = self.current_manifest(table)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        return spark.read.parquet(m["path"])
+        if "schema" not in m:  # committed before manifests carried it
+            return spark.read.parquet(m["path"])
+        return spark.read.schema(StructType.fromJson(m["schema"])).parquet(m["path"])
 
     # -- write side ----------------------------------------------------------
     def write(
@@ -103,6 +108,7 @@ class SnapshotCatalog:
             "run_id": run_id,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "write_wall_ms": wall_ms,
+            "schema": df.schema.jsonValue(),
             **(extra or {}),
         }
         mpath = os.path.join(tdir, f"snap-{snap_id}.json")

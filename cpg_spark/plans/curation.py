@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import canonicalize, dedup, textstats
+from .pipeline import StagedPipeline, _fingerprint
 
 
 def curate(
@@ -190,13 +191,7 @@ CURATION_VERSION = "1"
 CURATION_STAGES = ("gate", "candidates", "verified_edges", "dup_map", "kept")
 
 
-def _fingerprint(*parts: str) -> str:
-    import hashlib
-
-    return hashlib.sha1("\x00".join(parts).encode()).hexdigest()
-
-
-class CurationPipeline:
+class CurationPipeline(StagedPipeline):
     """The curation DAG as resumable snapshot stages (same contract as
     plans.pipeline.KgPipeline: fingerprint = input token + stage
     version + upstream fingerprints; committed stages are skipped on
@@ -216,12 +211,7 @@ class CurationPipeline:
         max_doc_freq: int | None = None,
         lsh_max_bucket: int | None = None,
     ):
-        from ..catalog import SnapshotCatalog
-
-        self.spark = spark
-        self.catalog = SnapshotCatalog(warehouse)
-        self.warehouse = warehouse
-        self.run_id = run_id
+        super().__init__(spark, warehouse, run_id)
         self.params = (
             target_langs,
             min_quality,
@@ -229,35 +219,6 @@ class CurationPipeline:
             max_doc_freq,
             lsh_max_bucket,
         )
-        self.skipped: list[str] = []
-        self.ran: list[str] = []
-
-    def _stage(self, name: str, fingerprint: str, compute, input_split: str):
-        from ..lineage import StageTimer, append_lineage, partition_counts
-
-        if self.catalog.has_snapshot(name, fingerprint):
-            self.skipped.append(name)
-            return self.catalog.read(self.spark, name)
-        timer = StageTimer()
-        df = compute().cache()
-        pc = partition_counts(df)
-        manifest = self.catalog.write(
-            df, name, fingerprint, stage=name, run_id=self.run_id
-        )
-        append_lineage(
-            self.spark,
-            self.warehouse,
-            self.run_id,
-            name,
-            input_split,
-            rows_in=None,
-            per_partition_out=pc,
-            wall_ms=timer.wall_ms(),
-            snapshot_id=manifest["snapshot_id"],
-        )
-        df.unpersist()
-        self.ran.append(name)
-        return self.catalog.read(self.spark, name)
 
     def run(self, docs: DataFrame, input_token: str, stop_after: str | None = None):
         """Run (or resume) curation over docs(doc_id, text, lang, ...).

@@ -40,21 +40,16 @@ def _fingerprint(*parts: str) -> str:
     return hashlib.sha1("\x00".join(parts).encode()).hexdigest()
 
 
-class KgPipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        warehouse: str,
-        run_id: str = "run-0",
-        target_langs: tuple[str, ...] = TARGET_LANGS,
-        extract_partitions: int | None = None,
-    ):
+class StagedPipeline:
+    """A DAG of resumable snapshot stages. Each stage commits one
+    snapshot and appends its per-partition lineage rows; a stage whose
+    fingerprint is already committed is read back instead of rerun."""
+
+    def __init__(self, spark: SparkSession, warehouse: str, run_id: str):
         self.spark = spark
         self.catalog = SnapshotCatalog(warehouse)
         self.warehouse = warehouse
         self.run_id = run_id
-        self.target_langs = target_langs
-        self.extract_partitions = extract_partitions
         self.skipped: list[str] = []
         self.ran: list[str] = []
 
@@ -66,15 +61,19 @@ class KgPipeline:
         compute,
         input_split: str,
     ) -> DataFrame:
+        """Commit ``compute()`` as stage ``name`` and return the committed
+        snapshot. Beyond any action ``compute`` takes while building its
+        plan, the snapshot write is the stage's only Spark action: the
+        frame is not cached, the lineage counts come from the written
+        files' footers, and the driver writes the lineage rows."""
         if self.catalog.has_snapshot(name, fingerprint):
             self.skipped.append(name)
             return self.catalog.read(self.spark, name)
         timer = StageTimer()
-        df = compute().cache()
-        pc = partition_counts(df)
         manifest = self.catalog.write(
-            df, name, fingerprint, stage=name, run_id=self.run_id
+            compute(), name, fingerprint, stage=name, run_id=self.run_id
         )
+        df = self.catalog.read(self.spark, name)
         append_lineage(
             self.spark,
             self.warehouse,
@@ -82,13 +81,26 @@ class KgPipeline:
             name,
             input_split,
             rows_in=None,
-            per_partition_out=pc,
+            per_partition_out=partition_counts(df),
             wall_ms=timer.wall_ms(),
             snapshot_id=manifest["snapshot_id"],
         )
-        df.unpersist()
         self.ran.append(name)
-        return self.catalog.read(self.spark, name)
+        return df
+
+
+class KgPipeline(StagedPipeline):
+    def __init__(
+        self,
+        spark: SparkSession,
+        warehouse: str,
+        run_id: str = "run-0",
+        target_langs: tuple[str, ...] = TARGET_LANGS,
+        extract_partitions: int | None = None,
+    ):
+        super().__init__(spark, warehouse, run_id)
+        self.target_langs = target_langs
+        self.extract_partitions = extract_partitions
 
     # -- the DAG ----------------------------------------------------------------
     def run(

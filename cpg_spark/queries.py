@@ -59,16 +59,20 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # probe lists, the entity alias dictionary): createDataFrame of a
 # hard-coded literal list costs ~0.15-0.25 s of driver time per call;
 # the rows are compile-time constants, so one local-relation plan per
-# session is the same frame every time.
-_CONST_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
+# session is the same frame every time. The rows and schema string are
+# stored beside the frame: a call that reuses a key with different ones
+# raises instead of being served the other call's frame.
+_CONST_CACHE: dict[str, tuple[SparkSession, DataFrame, str, list]] = {}
 
 
 def _const_df(spark: SparkSession, key: str, rows, schema: str) -> DataFrame:
     hit = _CONST_CACHE.get(key)
     if hit is not None and hit[0] is spark:
+        if (hit[2], hit[3]) != (schema, rows):
+            raise ValueError(f"_const_df key {key!r} reused with different rows or schema")
         return hit[1]
     df = spark.createDataFrame(rows, schema)
-    _CONST_CACHE[key] = (spark, df)
+    _CONST_CACHE[key] = (spark, df, schema, rows)
     return df
 
 

@@ -16,6 +16,20 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def last_execution_id(spark):
+    """Callable giving the id of the session's newest SQL execution. The
+    status store keeps the newest executions (ids ascend), so the last id
+    counts executions even once old ones are evicted."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last() -> int:
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+    return last
+
+
 @pytest.fixture
 def restore_checkpoint_dir(spark):
     """For a test that gives the context a checkpoint directory: put

@@ -119,6 +119,19 @@ def test_curation_pipeline_stages_and_resume(spark, docs_df, tmp_path):
     assert p3.ran == ["gate"]
 
 
+def test_curation_lineage_equals_snapshot(spark, docs_df, tmp_path):
+    from cpg_spark.lineage import read_lineage
+    from cpg_spark.plans.curation import CURATION_STAGES, CurationPipeline
+
+    wh = str(tmp_path / "wh")
+    pipe = CurationPipeline(spark, wh, run_id="sum", target_langs=("en",), min_quality=0.3)
+    pipe.run(docs_df, input_token="t-sum")
+    lin = read_lineage(spark, wh).collect()
+    for stage in CURATION_STAGES:
+        got = sum(r["rows_out"] for r in lin if r["stage"] == stage)
+        assert got == pipe.catalog.read(spark, stage).count(), stage
+
+
 def test_curate_c4_gate_and_exact_substring_stages(spark):
     """The r6 opt-in stages compose: a page failing the C4 battery is
     gate-dropped; a duplicated >=L-token passage shared by two kept

@@ -11,14 +11,6 @@ from cpg_spark.operators import canonicalize
 from cpg_spark.operators.iterutil import HARD_CAP_FACTOR, fixpoint
 
 
-def _last_execution_id(spark) -> int:
-    # the status store keeps the newest executions (ids ascend), so the
-    # last id counts executions even once old ones are evicted
-    store = spark._jsparkSession.sharedState().statusStore()
-    n = store.executionsCount()
-    return store.executionsList(n - 1, 1).head().executionId() if n else -1
-
-
 def _persisted(sc) -> set:
     return set(sc._jsc.getPersistentRDDs().keySet())
 
@@ -30,7 +22,7 @@ def _chain(spark, n):
 
 
 @pytest.fixture(scope="module")
-def star_runs(spark):
+def star_runs(spark, last_execution_id):
     """Per chain length: (star rounds, SQL executions, RDDs the call
     left persisted) of one connected_components call on the distributed
     path."""
@@ -49,9 +41,9 @@ def star_runs(spark):
             df = _chain(spark, n)
             rounds[0] = 0
             p0 = _persisted(sc)
-            x0 = _last_execution_id(spark)
+            x0 = last_execution_id()
             out = canonicalize.connected_components(df, driver_threshold=0)
-            x1 = _last_execution_id(spark)
+            x1 = last_execution_id()
             left = len(_persisted(sc) - p0)
             assert {r["component_id"] for r in out.collect()} == {0}
             runs[n] = (rounds[0], x1 - x0, left)

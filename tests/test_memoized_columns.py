@@ -123,3 +123,14 @@ def test_const_df_cache(spark):
     queries._CONST_CACHE["__test_rows"] = (object(), a)
     c = queries._const_df(spark, "__test_rows", [(1,), (2,)], "x long")
     assert c is not a
+
+
+def test_const_df_key_collision_raises(spark):
+    from cpg_spark import queries
+
+    a = queries._const_df(spark, "__test_collide", [(1,), (2,)], "x long")
+    assert queries._const_df(spark, "__test_collide", [(1,), (2,)], "x long") is a
+    with pytest.raises(ValueError, match="__test_collide"):
+        queries._const_df(spark, "__test_collide", [(1,), (3,)], "x long")
+    with pytest.raises(ValueError, match="__test_collide"):
+        queries._const_df(spark, "__test_collide", [(1,), (2,)], "x int")

@@ -2,10 +2,14 @@
 smoke corpus, gate is >= 0.95), snapshot resume without recompute, and
 lineage rows — the north_rule requirements."""
 
+import json
+import os
 import tempfile
 
-from cpg_spark.lineage import read_lineage
-from cpg_spark.plans.pipeline import KgPipeline
+import pytest
+
+from cpg_spark.lineage import append_lineage, read_lineage
+from cpg_spark.plans.pipeline import STAGES, KgPipeline
 
 
 def _triple_set(df):
@@ -79,6 +83,111 @@ def test_lineage_rows_written(spark, pages_df, alias_df):
     assert row["run_id"] == "lin"
     assert row["rows_out"] is not None and row["wall_ms"] is not None
     assert row["snapshot_id"] == 1
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, pages_df, alias_df):
+    """(warehouse, pipeline) of one full run into a fresh warehouse."""
+    wh = tempfile.mkdtemp(prefix="kgwh_")
+    pipe = KgPipeline(spark, wh, run_id="full")
+    pipe.run(pages_df, alias_df, input_token="tok-full")
+    assert pipe.ran == list(STAGES)
+    return wh, pipe
+
+
+def test_lineage_equals_snapshot(spark, full_run):
+    wh, pipe = full_run
+    lin = read_lineage(spark, wh).filter("run_id = 'full'").collect()
+    for stage in STAGES:
+        rows = [(r["partition_id"], r["rows_out"]) for r in lin if r["stage"] == stage]
+        pids = [pid for pid, _ in rows]
+        assert len(pids) == len(set(pids)), stage
+        assert sum(n for _, n in rows) == pipe.catalog.read(spark, stage).count(), stage
+
+
+def test_empty_stage_lineage_is_one_zero_row(spark, pages_df):
+    wh = tempfile.mkdtemp(prefix="kgwh_")
+    pipe = KgPipeline(spark, wh, run_id="empty")
+    out = pipe._stage("nothing", "fp-empty", lambda: pages_df.limit(0), "tok-empty")
+    assert out.count() == 0
+    rows = [(r["partition_id"], r["rows_out"]) for r in read_lineage(spark, wh).collect()]
+    assert rows == [(0, 0)]
+
+
+def test_stage_commit_is_one_execution_and_keeps_no_blocks(
+    spark, pages_df, alias_df, last_execution_id
+):
+    """Committing a map stage runs one SQL execution (the snapshot
+    write), and a stage commit persists no blocks: none are added
+    between building the stage's plan and its write, nor left after the
+    commit. Blocks an operator pins while its plan is built (the
+    connected-components edge checkpoint) are the operator's, so they
+    are the baseline the commit must leave as it found."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    pages_df.count(), alias_df.count()  # fill the fixtures' own caches first
+    pipe = KgPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="ex")
+    stage, write = pipe._stage, pipe.catalog.write
+    seen: dict[str, list] = {}
+    executions = {}
+
+    def watched_write(df, name, *args, **kwargs):
+        seen[name].append(persisted())
+        return write(df, name, *args, **kwargs)
+
+    def watched(name, fingerprint, compute, input_split):
+        def built():
+            df = compute()
+            seen[name] = [persisted()]
+            return df
+
+        x0 = last_execution_id()
+        out = stage(name, fingerprint, built, input_split)
+        seen[name].append(persisted())
+        executions[name] = last_execution_id() - x0
+        return out
+
+    pipe._stage, pipe.catalog.write = watched, watched_write
+    pipe.run(pages_df, alias_df, input_token="tok-ex")
+    assert list(seen) == list(STAGES)
+    for name, (built, at_write, committed) in seen.items():
+        assert at_write == built and committed == built, name
+    assert executions["sentences"] == 1
+
+
+def test_manifest_schema_matches_inferred(spark, full_run):
+    wh, pipe = full_run
+    for stage in STAGES:
+        path = pipe.catalog.current_manifest(stage)["path"]
+        assert pipe.catalog.read(spark, stage).schema == spark.read.parquet(path).schema, stage
+
+    # a manifest committed before manifests carried the schema still reads
+    m = pipe.catalog.current_manifest("nodes")
+    expected = sorted(tuple(r) for r in pipe.catalog.read(spark, "nodes").select("id", "n_mentions").collect())
+    del m["schema"]
+    with open(os.path.join(wh, "nodes", f"snap-{m['snapshot_id']}.json"), "w") as f:
+        json.dump(m, f)
+    old = pipe.catalog.read(spark, "nodes")
+    assert old.schema == spark.read.parquet(m["path"]).schema
+    assert sorted(tuple(r) for r in old.select("id", "n_mentions").collect()) == expected
+
+
+def test_torn_lineage_write_is_invisible(spark):
+    wh = tempfile.mkdtemp(prefix="kgwh_")
+    for stage, parts in (("a", [(0, 3), (2, 4)]), ("b", [])):
+        append_lineage(spark, wh, "torn", stage, "tok", None, parts, 7, 1)
+    tdir = os.path.join(wh, "_lineage")
+    with open(os.path.join(tdir, ".part-killed.zstd.parquet"), "wb") as f:
+        f.write(b"PAR1 not a parquet file")
+    files = [n for n in os.listdir(tdir) if not n.startswith(".")]
+    assert len(files) == 2
+    rows = sorted(
+        (r["stage"], r["partition_id"], r["rows_out"]) for r in read_lineage(spark, wh).collect()
+    )
+    assert rows == [("a", 0, 3), ("a", 2, 4), ("b", 0, 0)]
 
 
 def test_nodes_table_shape(spark, pages_df, alias_df):
