@@ -22,22 +22,19 @@ barrier and the next run resumes from the last committed snapshot.
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import SnapshotCatalog
 from ..lineage import StageTimer, append_lineage, partition_counts
-from ..operators import canonicalize, extract, link, materialize
+from ..operators import canonicalize, extract, iterutil, link, materialize
 from ..synth import TARGET_LANGS
 
 # bump when stage semantics change — invalidates committed snapshots
 PIPELINE_VERSION = "1"
 
 STAGES = ("sentences", "mentions", "links", "components", "triples", "triples_agg", "nodes")
-
-
-def _fingerprint(*parts: str) -> str:
-    return hashlib.sha1("\x00".join(parts).encode()).hexdigest()
 
 
 class StagedPipeline:
@@ -53,7 +50,27 @@ class StagedPipeline:
         self.skipped: list[str] = []
         self.ran: list[str] = []
 
-    # -- one checkpointed stage ------------------------------------------------
+    def _run(
+        self, dag: tuple, tokens: tuple[str, ...], input_token: str, stop_after: str | None
+    ) -> dict[str, DataFrame]:
+        """Run (or resume) ``dag``: ``(name, upstream, build)`` entries in
+        topological order. A stage's fingerprint chains ``tokens``, its
+        name and its upstream stages' fingerprints; ``build(out)`` gets
+        the committed frames of the stages before it. Returns
+        {stage: DataFrame} for every stage up to ``stop_after``."""
+        names = [name for name, _, _ in dag]
+        if stop_after is not None and stop_after not in names:
+            raise ValueError(f"stop_after={stop_after!r} is not a stage; stages: {names}")
+        fps: dict[str, str] = {}
+        out: dict[str, DataFrame] = {}
+        for name, upstream, build in dag:
+            parts = (*tokens, name, *(fps[u] for u in upstream))
+            fps[name] = hashlib.sha1("\x00".join(parts).encode()).hexdigest()
+            out[name] = self._stage(name, fps[name], partial(build, out), input_token)
+            if name == stop_after:
+                break
+        return out
+
     def _stage(
         self,
         name: str,
@@ -65,14 +82,20 @@ class StagedPipeline:
         snapshot. Beyond any action ``compute`` takes while building its
         plan, the snapshot write is the stage's only Spark action: the
         frame is not cached, the lineage counts come from the written
-        files' footers, and the driver writes the lineage rows."""
+        files' footers, and the driver writes the lineage rows. Local
+        checkpoints taken while building the plan are released once the
+        write returns: the snapshot is read back from its files, so
+        nothing downstream reads them."""
         if self.catalog.has_snapshot(name, fingerprint):
             self.skipped.append(name)
             return self.catalog.read(self.spark, name)
         timer = StageTimer()
+        sc = self.spark.sparkContext
+        before = iterutil._persisted_ids(sc)
         manifest = self.catalog.write(
             compute(), name, fingerprint, stage=name, run_id=self.run_id
         )
+        iterutil._release(sc, iterutil._persisted_ids(sc) - before)
         df = self.catalog.read(self.spark, name)
         append_lineage(
             self.spark,
@@ -112,80 +135,23 @@ class KgPipeline(StagedPipeline):
     ) -> dict[str, DataFrame]:
         """Run (or resume) the full pipeline. `input_token` must uniquely
         identify the input data (path or generator seed/size)."""
-        fps: dict[str, str] = {}
-        out: dict[str, DataFrame] = {}
-
-        def fp(stage: str, *upstream: str) -> str:
-            fps[stage] = _fingerprint(
-                input_token, PIPELINE_VERSION, stage, *[fps[u] for u in upstream]
-            )
-            return fps[stage]
-
         if self.extract_partitions:
             pages = pages.repartition(self.extract_partitions, "url")
 
-        sent = self._stage(
-            "sentences",
-            fp("sentences"),
-            lambda: extract.sentences(pages, self.target_langs),
-            input_token,
+        def clinks(o: dict[str, DataFrame]) -> DataFrame:
+            return materialize.canonical_links(o["links"], o["components"])
+
+        dag = (
+            ("sentences", (), lambda o: extract.sentences(pages, self.target_langs)),
+            ("mentions", ("sentences",), lambda o: extract.mentions(o["sentences"])),
+            ("links", ("mentions",), lambda o: link.link_mentions(o["mentions"], alias_dict)),
+            ("components", (), lambda o: canonicalize.canonical_map(alias_dict)),
+            (
+                "triples",
+                ("links", "components"),
+                lambda o: materialize.triples_from_links(clinks(o), o["components"]),
+            ),
+            ("triples_agg", ("triples",), lambda o: materialize.triples_agg(o["triples"])),
+            ("nodes", ("links", "components"), lambda o: materialize.nodes_table(clinks(o))),
         )
-        out["sentences"] = sent
-        if stop_after == "sentences":
-            return out
-
-        ment = self._stage(
-            "mentions", fp("mentions", "sentences"), lambda: extract.mentions(sent), input_token
-        )
-        out["mentions"] = ment
-        if stop_after == "mentions":
-            return out
-
-        links = self._stage(
-            "links",
-            fp("links", "mentions"),
-            lambda: link.link_mentions(ment, alias_dict),
-            input_token,
-        )
-        out["links"] = links
-        if stop_after == "links":
-            return out
-
-        comps = self._stage(
-            "components",
-            fp("components"),
-            lambda: canonicalize.canonical_map(alias_dict),
-            input_token,
-        )
-        out["components"] = comps
-        if stop_after == "components":
-            return out
-
-        def _triples() -> DataFrame:
-            clinks = materialize.canonical_links(links, comps)
-            return materialize.triples_from_links(clinks, comps)
-
-        triples = self._stage(
-            "triples", fp("triples", "links", "components"), _triples, input_token
-        )
-        out["triples"] = triples
-        if stop_after == "triples":
-            return out
-
-        tagg = self._stage(
-            "triples_agg",
-            fp("triples_agg", "triples"),
-            lambda: materialize.triples_agg(triples),
-            input_token,
-        )
-        out["triples_agg"] = tagg
-
-        def _nodes() -> DataFrame:
-            clinks = materialize.canonical_links(links, comps)
-            return materialize.nodes_table(clinks)
-
-        nodes = self._stage(
-            "nodes", fp("nodes", "links", "components"), _nodes, input_token
-        )
-        out["nodes"] = nodes
-        return out
+        return self._run(dag, (input_token, PIPELINE_VERSION), input_token, stop_after)

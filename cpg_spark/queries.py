@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.arrays import chunk_array, sorted_pairs
-from .functions.hashing import (  # noqa: F401
+from .functions.hashing import (
     CHAR_POLY_P,
     avalanche32_sql,
     char_poly_hash2_sql,
@@ -1706,7 +1706,6 @@ def q_link_scope_inferred(spark, sf_dir):
     the 'z' refs (declared nowhere) come back as inferred rows with
     hops -1 and the deterministic content-hash inferred id; the oracle
     recomputes the id with the same dual-base polynomial."""
-    from .functions.hashing import inferred_id_col  # noqa: F401
     from .operators import link
 
     cust = t(spark, sf_dir, "customer")

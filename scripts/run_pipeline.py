@@ -26,13 +26,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from cpg_spark.plans.pipeline import STAGES, KgPipeline
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True, help="pages parquet path")
     ap.add_argument("--warehouse", required=True, help="snapshot warehouse dir")
     ap.add_argument("--alias-dict", default=None, help="alias dict parquet (default: builtin synth dict)")
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--extract-partitions", type=int, default=None)
-    ap.add_argument("--stop-after", default=None, choices=[None, "sentences", "mentions", "links", "components", "triples"])
+    ap.add_argument("--stop-after", default=None, choices=[None, *STAGES])
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -40,7 +42,6 @@ def main() -> None:
     spark = SparkSession.builder.appName("cpg-spark-kg").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from cpg_spark.plans.pipeline import KgPipeline
     from cpg_spark.synth_spark import alias_dict_df
 
     pages = spark.read.parquet(args.pages)

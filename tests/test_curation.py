@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from cpg_spark.plans.curation import curate
+from cpg_spark.plans.curation import CURATION_STAGES, CurationPipeline, curate, gate
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -75,7 +75,6 @@ def test_curation_pipeline_stages_and_resume(spark, docs_df, tmp_path):
     and returns identical kept rows; killing after `candidates` resumes
     from there. Matches curate()'s answer on the same corpus."""
     from cpg_spark.lineage import read_lineage
-    from cpg_spark.plans.curation import CURATION_STAGES, CurationPipeline, curate
 
     wh = str(tmp_path / "wh")
     kw = dict(target_langs=("en",), min_quality=0.3, near_dup_jaccard=0.5)
@@ -119,17 +118,83 @@ def test_curation_pipeline_stages_and_resume(spark, docs_df, tmp_path):
     assert p3.ran == ["gate"]
 
 
-def test_curation_lineage_equals_snapshot(spark, docs_df, tmp_path):
-    from cpg_spark.lineage import read_lineage
-    from cpg_spark.plans.curation import CURATION_STAGES, CurationPipeline
-
-    wh = str(tmp_path / "wh")
+@pytest.fixture(scope="module")
+def staged_run(spark, docs_df, tmp_path_factory):
+    """(warehouse, pipeline) of one full staged run into a fresh warehouse."""
+    wh = str(tmp_path_factory.mktemp("wh"))
     pipe = CurationPipeline(spark, wh, run_id="sum", target_langs=("en",), min_quality=0.3)
-    pipe.run(docs_df, input_token="t-sum")
+    pipe.run(docs_df, input_token="tok-pin")
+    assert pipe.ran == list(CURATION_STAGES)
+    return wh, pipe
+
+
+def test_curation_lineage_equals_snapshot(spark, staged_run):
+    from cpg_spark.lineage import read_lineage
+
+    wh, pipe = staged_run
     lin = read_lineage(spark, wh).collect()
     for stage in CURATION_STAGES:
         got = sum(r["rows_out"] for r in lin if r["stage"] == stage)
         assert got == pipe.catalog.read(spark, stage).count(), stage
+
+
+def test_curation_fingerprints_are_pinned(staged_run):
+    """Committed warehouses resume only while the fingerprint formula
+    stays the same, so its output is pinned here."""
+    _, pipe = staged_run
+    fp = {s: pipe.catalog.current_manifest(s)["fingerprint"] for s in ("gate", "kept")}
+    assert fp == {
+        "gate": "f1da4d84d229081a53cb22ee956ede17fc3fd0ca",
+        "kept": "f9c1694deaf0ba6daa39d76f0a762107f8342130",
+    }
+
+
+def test_curation_stop_after_returns_the_stages_up_to_it(spark, docs_df, staged_run):
+    wh, _ = staged_run
+    kw = dict(target_langs=("en",), min_quality=0.3)
+    for i, stop in enumerate(CURATION_STAGES):
+        pipe = CurationPipeline(spark, wh, run_id="stop", **kw)
+        out = pipe.run(docs_df, input_token="tok-pin", stop_after=stop)
+        assert list(out) == list(CURATION_STAGES[: i + 1]) == pipe.skipped, stop
+        assert pipe.ran == [], stop
+    with pytest.raises(ValueError, match="verified_edges"):
+        CurationPipeline(spark, wh, **kw).run(docs_df, input_token="tok-pin", stop_after="edges")
+
+
+@pytest.mark.parametrize("target_langs,min_quality", [(None, 0.0), (("en",), 0.3)])
+def test_gate_equals_its_operators(spark, tmp_path, target_langs, min_quality):
+    """The gate equals the gate built from the quality_score and lang_id
+    operators joined back on doc_id, on rows with empty and NULL text
+    too: the same schema (nullability included) before the commit, and
+    the same columns and rows in the committed snapshot, which reads
+    every column back as nullable."""
+    from pyspark.sql import functions as F
+
+    from cpg_spark.operators import textstats
+
+    docs = spark.createDataFrame(
+        DOCS + [(6, "", "en"), (7, None, "en")], "doc_id long, text string, lang string"
+    )
+    pipe = CurationPipeline(
+        spark, str(tmp_path), target_langs=target_langs, min_quality=min_quality
+    )
+    got = pipe.run(docs, input_token="t-gate", stop_after="gate")["gate"]
+
+    q = textstats.quality_score(docs).select("doc_id", "quality")
+    lid = textstats.lang_id(docs).select("doc_id", "pred_lang")
+    gate_fail = F.lit(False)
+    if target_langs is not None:
+        gate_fail = gate_fail | ~F.col("pred_lang").isin(list(target_langs))
+    gate_fail = gate_fail | (F.coalesce(F.col("quality"), F.lit(0.0)) < min_quality)
+    ref = (
+        docs.join(q, "doc_id", "left")
+        .join(lid, "doc_id", "left")
+        .withColumn("gated", gate_fail)
+    )
+    assert gate(docs, target_langs, min_quality).schema == ref.schema
+    assert got.dtypes == ref.dtypes
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+    assert got.count() == len(DOCS) + 2
 
 
 def test_curate_c4_gate_and_exact_substring_stages(spark):

@@ -90,9 +90,30 @@ def full_run(spark, pages_df, alias_df):
     """(warehouse, pipeline) of one full run into a fresh warehouse."""
     wh = tempfile.mkdtemp(prefix="kgwh_")
     pipe = KgPipeline(spark, wh, run_id="full")
-    pipe.run(pages_df, alias_df, input_token="tok-full")
+    pipe.run(pages_df, alias_df, input_token="tok-pin")
     assert pipe.ran == list(STAGES)
     return wh, pipe
+
+
+def test_fingerprints_are_pinned(full_run):
+    """Committed warehouses resume only while the fingerprint formula
+    stays the same, so its output is pinned here."""
+    _, pipe = full_run
+    fp = {s: pipe.catalog.current_manifest(s)["fingerprint"] for s in ("sentences", "nodes")}
+    assert fp == {
+        "sentences": "bc98e7d98e242b25c547d2adc9be22b54d47ff1c",
+        "nodes": "97ca722755bdbb8e9afdab3a71461a4a6853d856",
+    }
+
+
+def test_stop_after_returns_the_stages_up_to_it(spark, pages_df, alias_df, full_run):
+    wh, _ = full_run
+    for i, stop in enumerate(STAGES):
+        pipe = KgPipeline(spark, wh, run_id="stop")
+        out = pipe.run(pages_df, alias_df, input_token="tok-pin", stop_after=stop)
+        assert list(out) == list(STAGES[: i + 1]) == pipe.skipped and pipe.ran == [], stop
+    with pytest.raises(ValueError, match="triples_agg"):
+        KgPipeline(spark, wh).run(pages_df, alias_df, input_token="tok-pin", stop_after="edges")
 
 
 def test_lineage_equals_snapshot(spark, full_run):
@@ -119,10 +140,11 @@ def test_stage_commit_is_one_execution_and_keeps_no_blocks(
 ):
     """Committing a map stage runs one SQL execution (the snapshot
     write), and a stage commit persists no blocks: none are added
-    between building the stage's plan and its write, nor left after the
-    commit. Blocks an operator pins while its plan is built (the
-    connected-components edge checkpoint) are the operator's, so they
-    are the baseline the commit must leave as it found."""
+    between building the stage's plan and its write, and the local
+    checkpoints an operator takes while its plan is built (the
+    connected-components edge checkpoint) are released once the
+    snapshot is written, so every commit leaves the blocks as it found
+    them."""
     sc = spark.sparkContext
 
     def persisted():
@@ -139,6 +161,8 @@ def test_stage_commit_is_one_execution_and_keeps_no_blocks(
         return write(df, name, *args, **kwargs)
 
     def watched(name, fingerprint, compute, input_split):
+        before = persisted()
+
         def built():
             df = compute()
             seen[name] = [persisted()]
@@ -146,15 +170,15 @@ def test_stage_commit_is_one_execution_and_keeps_no_blocks(
 
         x0 = last_execution_id()
         out = stage(name, fingerprint, built, input_split)
-        seen[name].append(persisted())
+        seen[name] += [persisted(), before]
         executions[name] = last_execution_id() - x0
         return out
 
     pipe._stage, pipe.catalog.write = watched, watched_write
     pipe.run(pages_df, alias_df, input_token="tok-ex")
     assert list(seen) == list(STAGES)
-    for name, (built, at_write, committed) in seen.items():
-        assert at_write == built and committed == built, name
+    for name, (built, at_write, committed, before) in seen.items():
+        assert at_write == built and committed == before, name
     assert executions["sentences"] == 1
 
 
