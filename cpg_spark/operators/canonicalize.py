@@ -8,6 +8,13 @@ algorithm (Kiveris et al., "Connected Components in MapReduce and
 Beyond") — O(log n) rounds of pure DataFrame joins, each round
 checkpointed to truncate lineage, deterministic via lexicographic min on
 content-hash ids.
+
+Dictionary-sized inputs (at most DRIVER_THRESHOLD edges or alias groups)
+take the reference's driver path instead: one collect, a union-find or
+Tarjan pass on the driver, and the result handed back as a local
+relation built from an Arrow table (a LocalTableScan; no Python
+worker). canonical_map, the pipeline's `components` stage, is one such
+action over the alias dictionary.
 """
 
 from __future__ import annotations
@@ -16,6 +23,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .iterutil import ckpt, closure, counted, fixpoint
+
+# at or under this many edges (connected_components, scc) or alias groups
+# (canonical_map) the graph is solved on the driver
+DRIVER_THRESHOLD = 10_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -54,38 +65,57 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out
 
 
+def _union_roots(groups) -> dict:
+    """member -> root for every member of `groups` (iterables of members
+    that belong together): driver-side union-find, root = the min member
+    of its component."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for group in groups:
+        roots = set()
+        for m in group:
+            parent.setdefault(m, m)
+            roots.add(find(m))
+        if roots:
+            root = min(roots)
+            for r in roots:
+                parent[r] = root
+    return {m: find(m) for m in parent}
+
+
+def _pairs_frame(spark, pairs, dtype, nullable: bool = True) -> DataFrame:
+    """(member_id, component_id) rows computed on the driver, as a local
+    relation built from an Arrow table: its plan is a LocalTableScan,
+    where `createDataFrame` of a row list parallelizes pickled rows
+    through a Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    cols = ("member_id", "component_id")
+    at = to_arrow_type(dtype)
+    values = tuple(zip(*pairs)) or ((), ())
+    table = pa.table({c: pa.array(v, at) for c, v in zip(cols, values)})
+    schema = StructType([StructField(c, dtype, nullable) for c in cols])
+    return spark.createDataFrame(table, schema)
+
+
 def _unionfind_driver(e: DataFrame) -> DataFrame:
     """Driver-side union-find for dictionary-sized edge sets. The
     reference runs Tarjan on the driver unconditionally
     (Components.kt:97-131); here it is gated behind a size threshold
     where a collect is strictly cheaper than ~log(n) shuffle rounds —
     the distributed large-star/small-star path remains the scale path."""
-    rows = e.collect()
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for r in rows:
-        u, v = r["u"], r["v"]
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
-    nodes = {x for r in rows for x in (r["u"], r["v"])}
-    out = [(m, find(m)) for m in sorted(nodes)]
-    spark = e.sparkSession
-    dt = e.schema["u"].dataType
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [StructField("member_id", dt), StructField("component_id", dt)]
-    )
-    return spark.createDataFrame(out, schema)
+    roots = _union_roots((r["u"], r["v"]) for r in e.collect())
+    return _pairs_frame(e.sparkSession, sorted(roots.items()), e.schema["u"].dataType)
 
 
 def connected_components(
@@ -93,7 +123,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    driver_threshold: int = 10_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """(member_id, component_id) for every node appearing in `edges`;
     component_id = lexicographic min member id.
@@ -409,14 +439,7 @@ def _tarjan_driver(e: DataFrame) -> DataFrame:
                 root = min(members)
                 for m in members:
                     comp[m] = root
-    spark = e.sparkSession
-    dt = e.schema["u"].dataType
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [StructField("member_id", dt), StructField("component_id", dt)]
-    )
-    return spark.createDataFrame(sorted(comp.items()), schema)
+    return _pairs_frame(e.sparkSession, sorted(comp.items()), e.schema["u"].dataType)
 
 
 def scc(
@@ -424,7 +447,7 @@ def scc(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    driver_threshold: int = 10_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph:
     (member_id, component_id) for every node in `edges`, component_id =
@@ -637,7 +660,28 @@ def dict_duplicate_edges(alias_dict: DataFrame) -> DataFrame:
 
 def canonical_map(alias_dict: DataFrame) -> DataFrame:
     """member_id -> component_id over dictionary-duplicate edges, covering
-    ALL dictionary entities (singletons map to themselves)."""
+    ALL dictionary entities (singletons map to themselves).
+
+    A dictionary is driver-sized, so it is solved in one action: the
+    (alias, entity_type) member sets are collected (at most
+    DRIVER_THRESHOLD + 1 of them) and a driver union-find emits
+    (member, root) for every member; every entity is in some group, so
+    no separate pass collects the singletons. A dictionary with more
+    groups runs dict_duplicate_edges -> connected_components and joins
+    the singletons back."""
+    groups = (
+        alias_dict.groupBy("alias", "entity_type")
+        .agg(F.collect_set("entity_id").alias("members"))
+        .select("members")
+        .limit(DRIVER_THRESHOLD + 1)
+        .collect()
+    )
+    if len(groups) <= DRIVER_THRESHOLD:
+        field = alias_dict.schema["entity_id"]
+        roots = _union_roots(r["members"] for r in groups)
+        return _pairs_frame(
+            alias_dict.sparkSession, sorted(roots.items()), field.dataType, field.nullable
+        )
     edges = dict_duplicate_edges(alias_dict)
     cc = connected_components(edges)
     everyone = alias_dict.select(F.col("entity_id").alias("member_id")).distinct()

@@ -7,7 +7,8 @@ pick the best candidate, and create inferred entities for unresolved
 references (reference inference/Inference.kt:57-343).
 
 Scale design: the dictionary is pre-resolved to its best candidate per
-alias ONCE (a window over the tiny dict), so the big-side resolution is a
+alias ONCE (a window over the tiny dict, on one partition with no
+exchange), so the big-side resolution is a
 single broadcast hash join — zero shuffle on the mention stream. The
 scored variant (link_candidates) keeps all candidates for diagnostics and
 demonstrates the window best-pick on the big side.
@@ -26,10 +27,15 @@ def best_alias_dict(alias_dict: DataFrame) -> DataFrame:
     """Resolve ambiguity inside the dictionary: one best entity per alias
     (highest prior, tie-break min entity_id) — the innermost-scope pick
     (reference ScopeManager.resolveReference, ScopeManager.kt:625-653)
-    applied to the symbol table once instead of per reference."""
+    applied to the symbol table once instead of per reference.
+
+    The window runs on one partition: that satisfies its clustering, so
+    it needs no exchange, and its output is the broadcast build side of
+    link_mentions, which has to fit the driver anyway."""
     w = Window.partitionBy("alias").orderBy(F.desc("prior"), F.asc("entity_id"))
     return (
-        alias_dict.withColumn("__rn", F.row_number().over(w))
+        alias_dict.coalesce(1)
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )

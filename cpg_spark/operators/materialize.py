@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import sorted_pairs
-from .skew import salted_collect_set
 
 
 def canonical_links(links: DataFrame, canon: DataFrame) -> DataFrame:
@@ -172,30 +171,58 @@ def merge_nodes(
 
 
 def nodes_table(clinks: DataFrame, max_example_urls: int = 5) -> DataFrame:
-    """Canonical node table with mention/page stats; example-url evidence
-    is a holistic agg -> salted two-phase collect (operators/skew.py)."""
-    stats = clinks.groupBy("canon_id").agg(
-        F.first("entity_name").alias("name"),
-        F.first("entity_type").alias("entity_type"),
-        F.max(F.col("is_inferred").cast("int")).cast("boolean").alias("is_inferred"),
-        F.count(F.lit(1)).cast("long").alias("n_mentions"),
-        F.countDistinct("url").alias("n_pages"),
-    )
-    examples = salted_collect_set(
-        clinks, ["canon_id"], "url", "example_urls", max_items=max_example_urls
-    )
-    return (
-        stats.join(examples, "canon_id", "left")
-        .select(
-            F.col("canon_id").alias("id"),
-            F.lit("entity").alias("kind"),
-            "name",
-            "entity_type",
-            "is_inferred",
-            "n_mentions",
-            F.col("n_pages").cast("long").alias("n_pages"),
-            "example_urls",
+    """Canonical node table with mention/page stats and the
+    `max_example_urls` smallest example urls, from one salted
+    partitioning.
+
+    Rows are hash-partitioned once by (canon_id, salt) with salt =
+    pmod(xxhash64(canon_id, url), 16): a url always falls in one salt of
+    its entity, and a hot entity still spreads over 16 partitions. Then
+    three aggregation levels: (canon_id, salt, url) and (canon_id, salt)
+    run on that partitioning with no exchange; the merge to canon_id
+    shuffles only map-side partial rows, whose url lists hold at most
+    `max_example_urls` sorted urls each. Per-salt page counts add up,
+    because the salts of an entity split its urls."""
+    salt = F.pmod(F.xxhash64("canon_id", "url"), F.lit(16))
+    per_url = (
+        clinks.withColumn("__salt", salt)
+        .repartition("canon_id", "__salt")
+        .groupBy("canon_id", "__salt", "url")
+        .agg(
+            F.first("entity_name").alias("name"),
+            F.first("entity_type").alias("entity_type"),
+            F.max(F.col("is_inferred").cast("int")).alias("__inf"),
+            F.count(F.lit(1)).alias("__n"),
         )
+    )
+    per_salt = per_url.groupBy("canon_id", "__salt").agg(
+        F.first("name").alias("name"),
+        F.first("entity_type").alias("entity_type"),
+        F.max("__inf").alias("__inf"),
+        F.sum("__n").alias("__n"),
+        F.count("url").alias("__pages"),
+        F.slice(F.sort_array(F.collect_list("url")), 1, max_example_urls).alias("__urls"),
+    )
+    urls = F.slice(F.array_sort(F.flatten(F.collect_list("__urls"))), 1, max_example_urls)
+    return per_salt.groupBy("canon_id").agg(
+        F.first("name").alias("name"),
+        F.first("entity_type").alias("entity_type"),
+        F.max("__inf").cast("boolean").alias("is_inferred"),
+        # sum() is nullable; every entity has rows, so the 0 never shows
+        F.coalesce(F.sum("__n"), F.lit(0)).cast("long").alias("n_mentions"),
+        F.coalesce(F.sum("__pages"), F.lit(0)).cast("long").alias("n_pages"),
+        urls.alias("example_urls"),
+    ).select(
+        F.col("canon_id").alias("id"),
+        F.lit("entity").alias("kind"),
+        "name",
+        "entity_type",
+        "is_inferred",
+        "n_mentions",
+        "n_pages",
+        # n_mentions is at least 1, so this is the list itself; the CASE
+        # keeps example_urls declared nullable, as it always was
+        F.when(F.col("n_mentions") > 0, F.col("example_urls")).alias("example_urls"),
     )
 
 

@@ -1,17 +1,17 @@
-"""Skew handling: salted aggregation and salted joins.
+"""Skew handling: salted aggregation.
 
 Web corpora have Zipfian keys (a hot entity appears on >=10% of pages —
 the `recordMap` hot-class analog). Spark's map-side partial aggregation
 already absorbs skew for algebraic aggs (count/sum/min/max); the cases
 that genuinely skew are (a) holistic aggs (collect_set / collect_list —
 one reducer holds the whole hot key) and (b) shuffle joins with a hot
-key. Both get an explicit salt here; AQE skew-join stays on as backup
-(session.py).
+key. materialize.nodes_table salts its holistic example-url aggregate
+itself; AQE skew-join covers hot join keys (session.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -22,34 +22,6 @@ def with_salt(df: DataFrame, n_salts: int = 16, col_name: str = "__salt") -> Dat
     return df.withColumn(
         col_name, F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)).cast("int")
     )
-
-
-def salted_collect_set(
-    df: DataFrame,
-    keys: list[str],
-    value: str,
-    out: str,
-    n_salts: int = 16,
-    max_items: int | None = None,
-) -> DataFrame:
-    """Two-phase collect_set: phase 1 aggregates per (key, salt) so no
-    single reducer sees the whole hot key; phase 2 merges the n_salts
-    partial sets (bounded fan-in). `max_items` caps each partial set —
-    at web scale evidence lists must be bounded anyway."""
-    salted = with_salt(df.select(*keys, value), n_salts)
-    phase1 = salted.groupBy(*keys, "__salt").agg(
-        F.collect_set(value).alias("__partial")
-    )
-    if max_items is not None:
-        phase1 = phase1.withColumn(
-            "__partial", F.slice(F.sort_array("__partial"), 1, max_items)
-        )
-    merged = phase1.groupBy(*keys).agg(
-        F.array_distinct(F.flatten(F.collect_list("__partial"))).alias(out)
-    )
-    if max_items is not None:
-        merged = merged.withColumn(out, F.slice(F.sort_array(out), 1, max_items))
-    return merged
 
 
 def salted_count(
@@ -68,22 +40,3 @@ def salted_count(
     phase1 = salted.groupBy(*keys, "__salt").agg(F.count(F.lit(1)).alias("__c"))
     return phase1.groupBy(*keys).agg(F.sum("__c").cast("long").alias(out))
 
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Shuffle join with the hot-key fix when the small side is too big to
-    broadcast: salt the big side randomly-but-deterministically, explode
-    the small side across all salts, join on (key, salt)."""
-    big_s = big.withColumn(
-        "__salt", F.pmod(F.xxhash64(*big.columns), F.lit(n_salts)).cast("int")
-    )
-    small_s = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = big_s.join(small_s, [key, "__salt"], how)
-    return out.drop("__salt")

@@ -1,9 +1,15 @@
 """Dev smoke: run the KG pipeline in-memory on the synthetic corpus and
-diff against the independent golden fixtures. Not part of pytest."""
+diff against the independent golden fixtures. Not part of pytest.
+
+    python scripts/smoke_pipeline.py
+
+Tests the checkout it sits in; exits 1 when any mismatch count is
+nonzero."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
@@ -26,6 +32,7 @@ diff = (
     .count()
 )
 print("extraction mismatches:", diff)
+mismatches = diff
 
 # 2. pipeline stages
 sent = extract.sentences(pages)
@@ -36,8 +43,9 @@ comps = canonicalize.canonical_map(adict)
 # components vs expected
 got_comps = {r["member_id"]: r["component_id"] for r in comps.collect()}
 exp_comps = {r["member_id"]: r["component_id"] for r in corpus["expected_components"]}
-print("component mismatches:", sum(1 for k, v in exp_comps.items() if got_comps.get(k) != v),
-      "of", len(exp_comps))
+comp_diff = sum(1 for k, v in exp_comps.items() if got_comps.get(k) != v)
+print("component mismatches:", comp_diff, "of", len(exp_comps))
+mismatches += comp_diff
 
 clinks = materialize.canonical_links(links, comps)
 triples = materialize.triples_from_links(clinks, comps)
@@ -58,4 +66,6 @@ for t in sorted(fp)[:10]:
     print("  FP", t)
 for t in sorted(fn)[:10]:
     print("  FN", t)
+mismatches += len(fp) + len(fn)
 spark.stop()
+sys.exit(1 if mismatches else 0)

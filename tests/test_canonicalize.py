@@ -86,6 +86,39 @@ def test_canonical_map_matches_golden(spark, alias_df, corpus):
     assert got == exp
 
 
+def test_canonical_map_over_threshold_matches_golden(spark, alias_df, corpus, monkeypatch):
+    """Past DRIVER_THRESHOLD alias groups, canonical_map runs the
+    duplicate-edge CC and joins the singletons back: same map, same
+    schema as the one-action driver path."""
+    from cpg_spark.operators import canonicalize
+
+    driver = canonical_map(alias_df)
+    monkeypatch.setattr(canonicalize, "DRIVER_THRESHOLD", 0)
+    joined = canonical_map(alias_df)
+    assert "Join" in joined._jdf.queryExecution().executedPlan().toString()
+    assert joined.schema == driver.schema
+    got = {r["member_id"]: r["component_id"] for r in joined.collect()}
+    exp = {r["member_id"]: r["component_id"] for r in corpus["expected_components"]}
+    assert got == exp
+
+
+def test_driver_paths_start_no_python_worker(spark, alias_df):
+    """The driver-side results (canonical_map, CC union-find, SCC Tarjan)
+    come back as a local relation built from an Arrow table, not as
+    parallelized pickled rows, which a Python worker would deserialize."""
+    from cpg_spark.operators.canonicalize import scc
+
+    edges = spark.createDataFrame([(1, 2), (2, 1), (2, 3), (7, 8)], "src long, dst long")
+    for what, df in (
+        ("canonical_map", canonical_map(alias_df)),
+        ("connected_components", connected_components(edges)),
+        ("scc", scc(edges)),
+    ):
+        assert df.collect(), what
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (what, plan)
+
+
 # --- directed SCC ------------------------------------------------------------
 
 from cpg_spark.operators.canonicalize import bfs_reach, scc  # noqa: E402

@@ -182,6 +182,46 @@ def test_stage_commit_is_one_execution_and_keeps_no_blocks(
     assert executions["sentences"] == 1
 
 
+# Spark jobs per stage of a fresh run on the fixture corpus: the
+# dictionary-sized stages are one action each (components: the
+# alias-group collect and its map stage, then the write; links: the
+# broadcast dictionary and the write; nodes: the broadcast map, one
+# salted exchange, the entity merge and the write)
+STAGE_JOBS = {
+    "sentences": 1,
+    "mentions": 1,
+    "links": 2,
+    "components": 3,
+    "triples": 4,
+    "triples_agg": 2,
+    "nodes": 4,
+}
+
+
+def test_stage_job_budget(spark, pages_df, alias_df):
+    """Each stage runs under its own job group, the way perfbench
+    attributes a traced run's jobs, and stays within its job budget."""
+    sc = spark.sparkContext
+    pages_df.count(), alias_df.count()  # fill the fixtures' own caches first
+    wh = tempfile.mkdtemp(prefix="kgwh_")
+    pipe = KgPipeline(spark, wh, run_id="jobs")
+    stage, tag = pipe._stage, os.path.basename(wh)
+
+    def grouped(name, *args):
+        sc.setJobGroup(f"{tag}.{name}", name)
+        try:
+            return stage(name, *args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    pipe._stage = grouped
+    pipe.run(pages_df, alias_df, input_token="tok-jobs")
+    tracker = sc.statusTracker()
+    jobs = {s: len(tracker.getJobIdsForGroup(f"{tag}.{s}")) for s in STAGES}
+    assert all(jobs[s] <= STAGE_JOBS[s] for s in STAGES), jobs
+
+
 def test_manifest_schema_matches_inferred(spark, full_run):
     wh, pipe = full_run
     for stage in STAGES:
@@ -225,6 +265,96 @@ def test_nodes_table_shape(spark, pages_df, alias_df):
         assert r["id"] and r["kind"] == "entity"
         assert r["n_mentions"] >= r["n_pages"] >= 1
         assert r["example_urls"] is not None and len(r["example_urls"]) <= 5
+
+
+def _nodes_reference(clinks, max_example_urls=5):
+    """nodes_table as it used to be built: per-entity stats and a
+    two-phase salted collect_set of the example urls, two aggregations
+    joined on canon_id."""
+    from pyspark.sql import functions as F
+
+    stats = clinks.groupBy("canon_id").agg(
+        F.first("entity_name").alias("name"),
+        F.first("entity_type").alias("entity_type"),
+        F.max(F.col("is_inferred").cast("int")).cast("boolean").alias("is_inferred"),
+        F.count(F.lit(1)).cast("long").alias("n_mentions"),
+        F.countDistinct("url").alias("n_pages"),
+    )
+    salted = clinks.select("canon_id", "url").withColumn(
+        "__salt", F.pmod(F.xxhash64("canon_id", "url"), F.lit(16)).cast("int")
+    )
+    partial = salted.groupBy("canon_id", "__salt").agg(
+        F.slice(F.sort_array(F.collect_set("url")), 1, max_example_urls).alias("__p")
+    )
+    examples = partial.groupBy("canon_id").agg(
+        F.slice(
+            F.sort_array(F.array_distinct(F.flatten(F.collect_list("__p")))),
+            1,
+            max_example_urls,
+        ).alias("example_urls")
+    )
+    return stats.join(examples, "canon_id", "left").select(
+        F.col("canon_id").alias("id"),
+        F.lit("entity").alias("kind"),
+        "name",
+        "entity_type",
+        "is_inferred",
+        "n_mentions",
+        F.col("n_pages").cast("long").alias("n_pages"),
+        "example_urls",
+    )
+
+
+def _hot_pages(spark, n_pages=200):
+    """Pages that all mention one hot entity, beside one other entity."""
+    from cpg_spark import synth
+    from cpg_spark.schema import PAGES
+
+    world = synth.build_world()
+    rows = []
+    for i in range(n_pages):
+        other = world[1 + i % (len(world) - 1)].aliases[0]
+        text = f"{world[0].aliases[0]} opened a depot. {other} was there."
+        rows.append(
+            {
+                "url": f"https://hot.example.org/en/p{i:03d}",
+                "warc_ts": None,
+                "html": synth.page_html(text, "en", f"hot {i}"),
+                "text": text,
+                "lang": "en",
+            }
+        )
+    return spark.createDataFrame(rows, PAGES)
+
+
+@pytest.mark.parametrize("corpus_name", ["fixture", "hot"])
+def test_nodes_table_equals_reference(spark, pages_df, alias_df, corpus_name):
+    """nodes_table keeps the contract of the two-aggregation build: the
+    same schema, nullability included, and the same rows on every column
+    but `name`, which is a first() either way and must be the name of
+    some mention of the entity."""
+    from pyspark.sql import functions as F
+
+    from cpg_spark.operators import canonicalize, extract, link, materialize
+
+    pages = pages_df if corpus_name == "fixture" else _hot_pages(spark)
+    links = link.link_mentions(extract.mentions(extract.sentences(pages)), alias_df)
+    clinks = materialize.canonical_links(links, canonicalize.canonical_map(alias_df))
+    got, ref = materialize.nodes_table(clinks), _nodes_reference(clinks)
+    assert got.schema == ref.schema
+    g, r = got.drop("name"), ref.drop("name")
+    assert g.exceptAll(r).count() == 0 and r.exceptAll(g).count() == 0
+    names = {
+        row["canon_id"]: set(row["names"])
+        for row in clinks.groupBy("canon_id")
+        .agg(F.collect_set("entity_name").alias("names"))
+        .collect()
+    }
+    rows = got.collect()
+    assert len(rows) == len(names) > 1
+    assert all(row["name"] in names[row["id"]] for row in rows)
+    if corpus_name == "hot":
+        assert max(row["n_pages"] for row in rows) == 200
 
 
 def test_incremental_merge_equals_full_recompute(spark, pages_df, alias_df):
