@@ -79,7 +79,6 @@ def pagerank(
     weight_col: str | None = None,
     ordered: bool = True,
     ordered_salts: int = 16,
-    truncate_lineage: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over edges(src, dst[, weight]), fixed n_iter
     power iterations (no data-dependent stopping — same input, same
@@ -107,10 +106,9 @@ def pagerank(
     bit-exactly — pytest-asserted). The dangling-mass fold is salted
     the same way.
 
-    The edge and node frames are cached once (outside the plan-audit
-    mode below): every iteration re-reads them, and without the cache a deep edge
-    lineage (e.g. edges derived from a full extract->cooccur plan)
-    re-executes per iteration — the EdgeCachePass analog. On a real
+    The edge and node frames are cached once: every iteration re-reads
+    them, and without the cache a deep edge lineage (e.g. edges derived
+    from a full extract->cooccur plan) re-executes per iteration — the EdgeCachePass analog. On a real
     cluster this stage is a materialized snapshot instead. Caching does
     not change values, only lineage.
 
@@ -118,13 +116,11 @@ def pagerank(
     iterutil contract: localCheckpoint, or a reliable checkpoint when
     the context has a checkpoint directory) — the update reads ranks TWICE
     (contributions + dangling mass), so without truncation the plan
-    doubles per iteration. truncate_lineage=False is the PLAN-AUDIT
-    mode only: it skips both the checkpoints and the static caches so
-    `explain` shows the raw per-iteration operator shape (never run it
-    that way — the doubling is real).
+    doubles per iteration. The superseded iterations' checkpoints stay
+    persisted until the caller's release boundary (iterutil.release);
+    the returned frame reads only the last one.
 
     Returns (node, rank)."""
-    ck = ckpt if truncate_lineage else (lambda df: df)
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
@@ -147,12 +143,11 @@ def pagerank(
         "node",
         "left",
     ).select("node", F.col("__has_out").isNull().alias("__dang"))
-    if truncate_lineage:
-        e = e.cache()
-        nodes = nodes.cache()
+    e = e.cache()
+    nodes = nodes.cache()
     n = nodes.count()
     teleport = (F.lit(1.0) - F.lit(damping)) / F.lit(n)
-    ranks = ck(
+    ranks = ckpt(
         nodes.select("node", "__dang", (F.lit(1.0) / F.lit(n)).alias("rank"))
     )
     for _ in range(n_iter):
@@ -176,7 +171,7 @@ def pagerank(
             dangling = dang_ranks.agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
             )
-        ranks = ck(
+        ranks = ckpt(
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -192,12 +187,11 @@ def pagerank(
                 ).alias("rank"),
             ),
         )
-    if truncate_lineage:
-        # the returned ranks frame is already checkpointed and
-        # no longer depends on the statics — release them so repeated
-        # calls in a long-lived session don't leak cached partitions
-        for df in (e, nodes):
-            df.unpersist()
+    # the returned ranks frame is already checkpointed and no longer
+    # depends on the statics — release them so repeated calls in a
+    # long-lived session don't leak cached partitions
+    for df in (e, nodes):
+        df.unpersist()
     return ranks.select("node", "rank")
 
 
@@ -209,7 +203,6 @@ def hits(
     weight_col: str | None = None,
     ordered: bool = True,
     ordered_salts: int = 16,
-    truncate_lineage: bool = True,
 ) -> DataFrame:
     """Weighted HITS (Kleinberg 1999) over edges(src, dst[, weight]),
     fixed n_iter iterations: authorities a = normalize(Eᵀh), hubs
@@ -234,7 +227,6 @@ def hits(
     squares and quotient), the iterutil contract.
 
     Returns (node, authority, hub) for every node of either side."""
-    ck = ckpt if truncate_lineage else (lambda df: df)
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
@@ -244,9 +236,8 @@ def hits(
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
     )
-    if truncate_lineage:
-        e = e.cache()
-        nodes = nodes.cache()
+    e = e.cache()
+    nodes = nodes.cache()
 
     def _norm_scalar(scored: DataFrame, val: str) -> DataFrame:
         # sqrt of the deterministic sum of squares -> 1-row frame
@@ -280,10 +271,9 @@ def hits(
         # reuses its shuffle inside the one eager checkpoint job below
         # (one materialization barrier per half-step, not two — halves
         # the fixed per-iteration scheduling cost vs ckpt'ing both)
-        if truncate_lineage:
-            summed = summed.cache()
+        summed = summed.cache()
         norm = _norm_scalar(summed, "__u")
-        out = ck(
+        out = ckpt(
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(norm))
             .select(
@@ -294,8 +284,7 @@ def hits(
                 ).otherwise(F.lit(0.0)).alias("score"),
             ),
         )
-        if truncate_lineage:
-            summed.unpersist()
+        summed.unpersist()
         return out
 
     n = nodes.count()
@@ -319,10 +308,9 @@ def hits(
             F.coalesce("hub", F.lit(0.0)).alias("hub"),
         )
     )
-    out = ck(out)
-    if truncate_lineage:
-        for df in (e, nodes):
-            df.unpersist()
+    out = ckpt(out)
+    for df in (e, nodes):
+        df.unpersist()
     return out
 
 
@@ -333,7 +321,6 @@ def label_propagation(
     dst_col: str = "dst",
     weight_col: str | None = None,
     symmetric: bool = False,
-    truncate_lineage: bool = True,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al.
     2007's LPA with the random tie-break replaced by a total order):
@@ -362,7 +349,6 @@ def label_propagation(
     symmetric already — leave it off there).
 
     Returns (node, label); label is the community id."""
-    ck = ckpt if truncate_lineage else (lambda df: df)
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"),
@@ -379,9 +365,8 @@ def label_propagation(
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
     )
-    if truncate_lineage:
-        e = e.cache()
-        nodes = nodes.cache()
+    e = e.cache()
+    nodes = nodes.cache()
     labels = nodes.select("node", F.col("node").alias("lbl"))
     for _ in range(n_iter):
         nb = (
@@ -394,15 +379,14 @@ def label_propagation(
                 "__b"
             )
         ).select("node", F.col("__b.lbl").alias("__new"))
-        labels = ck(
+        labels = ckpt(
             labels.join(best, "node", "left").select(
                 "node", F.coalesce("__new", "lbl").alias("lbl")
             ),
         )
-    labels = ck(labels.select("node", F.col("lbl").alias("label")))
-    if truncate_lineage:
-        for df in (e, nodes):
-            df.unpersist()
+    labels = ckpt(labels.select("node", F.col("lbl").alias("label")))
+    for df in (e, nodes):
+        df.unpersist()
     return labels
 
 
@@ -587,7 +571,6 @@ def kcore(
     n_rounds: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    truncate_lineage: bool = True,
 ) -> DataFrame:
     """k-core membership by synchronous peeling (Seidman 1983; the
     Pregel-style determinization): each of the fixed n_rounds removes —
@@ -618,7 +601,6 @@ def kcore(
     and the join below would crash on deg=None — r6 ADVICE finding)."""
     if n_rounds < 1:
         raise ValueError("kcore requires n_rounds >= 1")
-    ck = ckpt if truncate_lineage else (lambda df: df)
     und = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
@@ -631,9 +613,8 @@ def kcore(
         und.select(F.col("b").alias("w"), F.col("a").alias("x"))
     )
     nodes = adj.select(F.col("w").alias("node")).distinct()
-    if truncate_lineage:
-        adj = adj.cache()
-        nodes = nodes.cache()
+    adj = adj.cache()
+    nodes = nodes.cache()
     alive = nodes
     deg = None
     for _ in range(n_rounds):
@@ -643,7 +624,7 @@ def kcore(
         deg = both.groupBy(F.col("w").alias("node")).agg(
             F.count(F.lit(1)).cast("long").alias("core_deg")
         )
-        deg = ck(deg)
+        deg = ckpt(deg)
         alive = deg.filter(F.col("core_deg") >= k).select("node")
     out = (
         nodes.join(
@@ -658,8 +639,7 @@ def kcore(
             ).otherwise(F.lit(0)).cast("long").alias("core_deg"),
         )
     )
-    out = ck(out)
-    if truncate_lineage:
-        for df in (adj, nodes):
-            df.unpersist()
+    out = ckpt(out)
+    for df in (adj, nodes):
+        df.unpersist()
     return out

@@ -1,12 +1,19 @@
-"""Lineage truncation and the one fixpoint loop behind every iterative
-operator (CC/SCC/BFS/compress in canonicalize.py, scope closures in
-link.py, DFG slicing in stringapprox.py, constant folding in
-evaluate.py).
+"""Lineage truncation, the one release rule for local checkpoints, and
+the one fixpoint loop behind every iterative operator (CC/SCC/BFS/
+compress in canonicalize.py, scope closures in link.py, DFG slicing in
+stringapprox.py, constant folding in evaluate.py).
 
 The checkpoint kind follows the SparkContext: a reliable `checkpoint()`
 when it has a checkpoint directory (`spark.checkpoint.dir` or
 `sc.setCheckpointDir`, the cluster setting — an executor loss mid-loop
 must not lose the only copy of a round), else `localCheckpoint()`.
+
+The release rule (`release`): a local checkpoint taken after a
+snapshot (`persisted_ids`) is released as soon as no handed-out frame
+reads it. It runs at three boundaries — each `fixpoint` round and stop,
+each registry entry's return (queries.py) and each stage commit
+(plans/pipeline.py) — and operators carry no release code: a direct
+caller of an operator owns the checkpoints of the frame it is handed.
 """
 
 from __future__ import annotations
@@ -34,9 +41,26 @@ def ckpt(df: DataFrame) -> DataFrame:
     return df.checkpoint()
 
 
-def _persisted_ids(sc) -> set[int]:
+def persisted_ids(sc) -> set[int]:
+    """Ids of the context's persisted RDDs: a snapshot for `release`."""
     ids = sc._jsc.sc().getPersistentRDDs().keys().mkString(",")
     return {int(i) for i in ids.split(",") if i}
+
+
+def _reads(frames: Sequence[DataFrame]) -> set[int]:
+    """Ids of the RDDs behind the `LogicalRDD` leaves of each frame's
+    analyzed plan; for a checkpointed frame that is the id of its
+    persisted blocks. Subquery plans are not walked, which is exact
+    while no operator builds a subquery (no `spark.sql`, `.scalar()` or
+    `.exists()` in this package)."""
+    ids = set()
+    for df in frames:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                ids.add(leaf.rdd().id())
+    return ids
 
 
 def _release(sc, ids: set[int]) -> None:
@@ -44,9 +68,16 @@ def _release(sc, ids: set[int]) -> None:
     for i in ids:
         rdd = rdds.get(i)
         # only local checkpoint blocks: a user frame that was cached
-        # elsewhere but first materialized inside a round stays
+        # elsewhere but first materialized after the snapshot stays
         if rdd is not None and rdd.rdd().isLocallyCheckpointed():
             rdd.unpersist(False)
+
+
+def release(sc, since: set[int], *live: DataFrame) -> None:
+    """Release every local checkpoint persisted after the snapshot
+    `since` that none of the `live` frames reads. Runs no Spark job;
+    reliable checkpoint files are left to Spark's ContextCleaner."""
+    _release(sc, persisted_ids(sc) - since - _reads(live))
 
 
 def _probe(df: DataFrame, metrics: list) -> tuple[DataFrame, dict]:
@@ -82,9 +113,11 @@ def fixpoint(
     previous round's. A round whose first frame comes out empty is
     rebuilt once with `fallback`, when given, before the loop stops. On
     a stop the other frames come back unmaterialized over the previous
-    round's checkpoints; otherwise the previous round's local
-    checkpoint blocks are released once the new round is materialized
-    (reliable checkpoint files are left to Spark's ContextCleaner).
+    round's checkpoints.
+
+    After each round and at the stop the release rule (module
+    docstring) keeps only the checkpoints the state in hand reads; the
+    caller owns those a stopped loop hands back.
 
     At `max_iter` rounds a bounded loop (hop/depth/round caps) returns
     silently; a `must_converge` loop warns, keeps going, and raises at
@@ -95,22 +128,19 @@ def fixpoint(
     metrics = [F.count(F.lit(1)).alias("n")]
     if key is not None:
         metrics.append(F.coalesce(F.bit_xor(F.xxhash64(*key)), F.lit(0)).alias("h"))
-    prev, held, i = None, set(), 0
+    since, prev, i = persisted_ids(sc), None, 0
     while must_converge or i < max_iter:
         i += 1
-        before = _persisted_ids(sc)
         head, *rest = step(state, i)
         head, cur = _probe(head, metrics)
         if cur["n"] == 0 and fallback is not None:
             head, *rest = fallback(state, i)
             head, cur = _probe(head, metrics)
         if cur["n"] == 0 or (key is not None and cur == prev):
-            if not rest:  # nothing lazy still reads the previous round
-                _release(sc, held)
+            release(sc, since, head, *rest)
             return (head, *rest)
         state = (head, *(ckpt(f) for f in rest))
-        _release(sc, held)
-        held = _persisted_ids(sc) - before
+        release(sc, since, *state)
         prev = cur
         if must_converge and i == max_iter:
             warnings.warn(

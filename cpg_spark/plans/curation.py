@@ -138,14 +138,14 @@ def curate(
     lsh_max_bucket: int | None = None,
     c4_gate: bool = False,
     exact_substring: int | None = None,
-    cache: bool = True,
 ) -> dict[str, DataFrame]:
     """Returns {kept, dropped, dup_map, lsh_dropped_buckets, unpersist}:
     kept survivors, dropped rows with a reason column, the doc_id ->
     canonical_id near/exact-dup map, the audit table of LSH buckets
     excluded by lsh_max_bucket (empty when uncapped), and an
     ``unpersist()`` callable. The gate and candidate-pair stages are
-    cached; the CALLER owns that cache's lifetime — call
+    cached; the CALLER owns that cache's lifetime, as it owns any local
+    checkpoint the returned frames read (iterutil.release) — call
     ``result["unpersist"]()`` once the outputs are materialized, or
     cached blocks accumulate in executor storage across repeated
     invocations in a long-lived session.
@@ -175,16 +175,13 @@ def curate(
     # at sf1.0, ~1s cached). A production run materializes this stage
     # to a snapshot; the cache is the in-session analog, released via
     # `unpersist`.
-    if cache:  # cache=False = plan-audit mode (explain the raw chain)
-        gated = gated.cache()
+    gated = gated.cache()
     surv = survivors(gated)
 
     sig = dedup.minhash_signatures(surv)
     # fan-out point #2: the candidate set feeds both sides of the verify
     # join — cache so MinHash+banding runs once (EdgeCachePass analog)
-    cand = dedup.lsh_candidate_pairs(sig, max_bucket_size=lsh_max_bucket)
-    if cache:
-        cand = cand.cache()
+    cand = dedup.lsh_candidate_pairs(sig, max_bucket_size=lsh_max_bucket).cache()
     dmap = dup_map(surv, verified_edges(surv, cand, max_doc_freq, near_dup_jaccard))
     lsh_dropped = dedup.lsh_dropped_buckets(sig, max_bucket_size=lsh_max_bucket)
 

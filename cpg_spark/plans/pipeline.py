@@ -82,20 +82,21 @@ class StagedPipeline:
         snapshot. Beyond any action ``compute`` takes while building its
         plan, the snapshot write is the stage's only Spark action: the
         frame is not cached, the lineage counts come from the written
-        files' footers, and the driver writes the lineage rows. Local
-        checkpoints taken while building the plan are released once the
-        write returns: the snapshot is read back from its files, so
-        nothing downstream reads them."""
+        files' footers, and the driver writes the lineage rows. The
+        commit is a release boundary (iterutil.release) with no live
+        frame: the snapshot is read back from its files, so every local
+        checkpoint taken while building the plan is released once the
+        write returns."""
         if self.catalog.has_snapshot(name, fingerprint):
             self.skipped.append(name)
             return self.catalog.read(self.spark, name)
         timer = StageTimer()
         sc = self.spark.sparkContext
-        before = iterutil._persisted_ids(sc)
+        since = iterutil.persisted_ids(sc)
         manifest = self.catalog.write(
             compute(), name, fingerprint, stage=name, run_id=self.run_id
         )
-        iterutil._release(sc, iterutil._persisted_ids(sc) - before)
+        iterutil.release(sc, since)
         df = self.catalog.read(self.spark, name)
         append_lineage(
             self.spark,

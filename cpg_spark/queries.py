@@ -11,11 +11,14 @@ bit-for-bit by the oracle; timestamps are emitted as formatted strings.
 Registry shape: QUERIES[name] = (fn(spark, sf_dir) -> DataFrame,
 oracle_sql | None). A None oracle means the driver records a weaker
 rows-only check (reserved for genuinely non-SQL-expressible ops).
+Each registered fn is a release boundary: the returned frame holds
+only the local checkpoints it reads, and its caller owns those.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import wraps
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -27,7 +30,7 @@ from .functions.hashing import (
     char_poly_hash2_sql,
     char_poly_hash_sql,
 )
-from .operators import canonicalize, dedup, similarity, textstats
+from .operators import canonicalize, dedup, iterutil, similarity, textstats
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -2848,8 +2851,8 @@ def q_dd_jaccard_verify(spark, sf_dir):
     docs = t_par(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs)
     # fan-out point (candidates feed the id semi-join AND the pair join):
-    # cache so the MinHash+banding DAG runs once (EdgeCachePass analog)
-    cand = dedup.lsh_candidate_pairs(sig).cache()
+    # checkpoint so the MinHash+banding DAG runs once (EdgeCachePass analog)
+    cand = iterutil.ckpt(dedup.lsh_candidate_pairs(sig))
     return dedup.jaccard_for_pairs(docs, cand)
 
 
@@ -5638,3 +5641,21 @@ QUERIES.update({
     "dd_bloom_contamination": (q_dd_bloom_contamination, SQL_DD_BLOOM_CONTAMINATION),
     "kg_kcore": (q_kg_kcore, SQL_KG_KCORE),
 })
+
+
+def _releasing(fn: Callable[[SparkSession, str], DataFrame]):
+    """`fn` as a release boundary (iterutil.release): the local
+    checkpoints it takes and its returned frame does not read are
+    released before the frame is handed out."""
+
+    @wraps(fn)
+    def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+        since = iterutil.persisted_ids(spark.sparkContext)
+        df = fn(spark, sf_dir)
+        iterutil.release(spark.sparkContext, since, df)
+        return df
+
+    return entry
+
+
+QUERIES.update({name: (_releasing(fn), sql) for name, (fn, sql) in QUERIES.items()})

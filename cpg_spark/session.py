@@ -68,6 +68,10 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Python workers unpickle UDFs that reference this package; they
+        # start in the driver's working directory, so name the package
+        # root instead of relying on it
+        .config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1]))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,6 +22,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as se
+    from cpg_spark.operators import iterutil
     from cpg_spark.session import get_spark
 
     spark = get_spark("check-oracles")
@@ -29,23 +30,28 @@ def main() -> int:
     register_views(con, sf_dir)
 
     qs, oracles = se.queries(), se.oracle_sql()
+    sc = spark.sparkContext
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        # one entry's checkpoints are released before the next starts
+        since = iterutil.persisted_ids(sc)
         if name not in oracles:
             n = fn(spark, sf_dir).count()
             print(f"ok?  {name}: rows-only check, {n} rows")
-            continue
-        try:
-            diag = compare_query(spark, con, fn, oracles[name], sf_dir)
-        except Exception as e:
-            diag = f"error: {e}"
-        if diag is None:
-            print(f"PASS {name}")
         else:
-            failures.append(name)
-            print(f"FAIL {name}: {diag}")
+            try:
+                diag = compare_query(spark, con, fn, oracles[name], sf_dir)
+            except Exception as e:
+                diag = f"error: {e}"
+            if diag is None:
+                print(f"PASS {name}")
+            else:
+                failures.append(name)
+                print(f"FAIL {name}: {diag}")
+        iterutil.release(sc, since)
+    print(f"persisted RDDs after the sweep: {len(iterutil.persisted_ids(sc))}")
     spark.stop()
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -65,8 +65,9 @@ def main() -> None:
         spark.catalog.clearCache()
 
     # composite pipelines (bench.py's kg_pipeline / curation_pipeline
-    # entries), audited uncached so every exchange is visible instead of
-    # an InMemoryRelation boundary
+    # entries): the KG chain audited uncached so every exchange is
+    # visible instead of an InMemoryRelation boundary; curate() as it
+    # runs, its gate and candidate caches showing as such boundaries
     from bench import kg_chain
 
     from cpg_spark.plans.curation import curate
@@ -82,32 +83,6 @@ def main() -> None:
             audit_plan(kg_df._jdf.queryExecution().explainString(mode)),
         )
     )
-    # the registry kg_pagerank runs eagerly (per-iteration checkpoints),
-    # so its headline row above is just the final checkpoint scan; this
-    # row explains the raw 5-iteration loop shape instead
-    from pyspark.sql import functions as F
-
-    from cpg_spark.operators.graphrank import pagerank
-    from cpg_spark.queries import q_kg_doc_cooccur
-
-    cooc = q_kg_doc_cooccur(spark, sf_dir)
-    pr_edges = cooc.select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst"),
-        F.col("n_evidence").alias("w"),
-    ).unionByName(
-        cooc.select(
-            F.col("obj").alias("src"), F.col("subj").alias("dst"),
-            F.col("n_evidence").alias("w"),
-        )
-    )
-    pr = pagerank(pr_edges, n_iter=5, weight_col="w", truncate_lineage=False)
-    rows.append(
-        (
-            "kg_pagerank (unrolled plan)",
-            audit_plan(pr._jdf.queryExecution().explainString(mode)),
-        )
-    )
-
     # r7 window candidates (added r6): the lazy ones audit directly
     for name in (
         "dd_exactsubstr", "ts_c4_gates", "sim_sq8_topk", "kg_triangles",
@@ -117,34 +92,6 @@ def main() -> None:
         df = fn(spark, sf_dir)
         rows.append((name, audit_plan(df._jdf.queryExecution().explainString(mode))))
         spark.catalog.clearCache()
-    # hits / label_prop run eagerly (per-half-step checkpoints), so the
-    # registry plan is just the final scan; audit ONE raw iteration
-    # instead (truncate_lineage=False doubles the plan per step by
-    # design — the per-iteration shape is the meaningful unit)
-    from cpg_spark.operators.graphrank import hits, label_propagation
-    from cpg_spark.queries import q_kg_doc_mentions
-
-    m = q_kg_doc_mentions(spark, sf_dir)
-    hedges = m.groupBy(
-        F.concat(F.lit("d:"), F.col("doc_id").cast("string")).alias("src"),
-        F.col("entity_id").alias("dst"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("w"))
-    h1 = hits(hedges, n_iter=1, weight_col="w", truncate_lineage=False)
-    rows.append(
-        (
-            "kg_hits (1 iteration, unrolled)",
-            audit_plan(h1._jdf.queryExecution().explainString(mode)),
-        )
-    )
-    lp1 = label_propagation(
-        pr_edges, n_iter=1, weight_col="w", truncate_lineage=False
-    )
-    rows.append(
-        (
-            "kg_label_prop (1 round, unrolled)",
-            audit_plan(lp1._jdf.queryExecution().explainString(mode)),
-        )
-    )
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     cur = curate(
@@ -154,7 +101,6 @@ def main() -> None:
         near_dup_jaccard=0.8,
         max_doc_freq=200,
         lsh_max_bucket=64,
-        cache=False,
     )
     rows.append(
         (
@@ -162,7 +108,7 @@ def main() -> None:
             audit_plan(cur["kept"]._jdf.queryExecution().explainString(mode)),
         )
     )
-    spark.catalog.clearCache()
+    cur["unpersist"]()
 
     lines = [
         "# Physical-plan audit (headline queries, sf0.1)",

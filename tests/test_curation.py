@@ -221,9 +221,10 @@ def test_curate_c4_gate_and_exact_substring_stages(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    res = curate(docs, c4_gate=True, exact_substring=10, cache=False)
+    res = curate(docs, c4_gate=True, exact_substring=10)
     kept = {r["doc_id"]: r for r in res["kept"].collect()}
     dropped = {r["doc_id"]: r["drop_reason"] for r in res["dropped"].collect()}
+    res["unpersist"]()
     assert dropped.get(3) == "gate"
     assert 1 in kept and 2 in kept
     # the 12-token passage is first in doc 1 -> doc 2 loses it
@@ -231,6 +232,7 @@ def test_curate_c4_gate_and_exact_substring_stages(spark):
     assert kept[2]["es_removed_tokens"] == 12
     assert "boiler0" in kept[1]["text"] and "boiler0" not in kept[2]["text"]
     # defaults off: schema has no es column and doc 3 survives
-    base = curate(docs, cache=False)
+    base = curate(docs)
     assert "es_removed_tokens" not in base["kept"].columns
     assert 3 in {r["doc_id"] for r in base["kept"].collect()}
+    base["unpersist"]()

@@ -1,13 +1,15 @@
 """Contract of iterutil.fixpoint, the loop behind every iterative
-operator: one SQL execution per round, superseded rounds released, and
-the two stop policies (must-converge guard, bounded cap)."""
+operator: one SQL execution per round, superseded rounds released, a
+stop that holds only what its output reads, and the two stop policies
+(must-converge guard, bounded cap)."""
 
+import gc
 import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators import canonicalize
+from cpg_spark.operators import canonicalize, iterutil
 from cpg_spark.operators.iterutil import HARD_CAP_FACTOR, fixpoint
 
 
@@ -62,6 +64,46 @@ def test_superseded_rounds_are_released(star_runs):
     (r_short, _, p_short), (r_long, _, p_long) = star_runs[10], star_runs[100]
     assert r_long > r_short
     assert p_long == p_short
+
+
+SCC_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 10), (10, 11), (11, 10), (20, 21)]
+
+
+@pytest.mark.parametrize(
+    "op, edges, want",
+    [
+        (
+            canonicalize.compress_chains,
+            [(i, i + 1) for i in range(40)],
+            {(0, 40, 40)},
+        ),
+        (
+            lambda df: canonicalize.scc(df, driver_threshold=0),
+            SCC_EDGES,
+            {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (10, 10), (11, 10), (20, 20), (21, 21)},
+        ),
+    ],
+    ids=["compress_chains", "scc"],
+)
+def test_stop_holds_only_what_its_output_reads(spark, monkeypatch, op, edges, want):
+    """Every fixpoint call, nested ones included, returns holding only
+    checkpoints its lazily returned frames read; the operator's output
+    still executes once Python has dropped everything else."""
+    sc = spark.sparkContext
+    loop, unread = iterutil.fixpoint, []
+
+    def checked(step, state, **kw):
+        since = _persisted(sc)
+        out = loop(step, state, **kw)
+        unread.append((_persisted(sc) - since) - iterutil._reads(out))
+        return out
+
+    monkeypatch.setattr(iterutil, "fixpoint", checked)
+    monkeypatch.setattr(canonicalize, "fixpoint", checked)
+    out = op(spark.createDataFrame(edges, "src long, dst long"))
+    assert unread and not set().union(*unread)
+    gc.collect()
+    assert {tuple(r) for r in out.collect()} == want
 
 
 def test_must_converge_warns_past_max_iter_and_stays_exact(spark):
