@@ -95,9 +95,9 @@ class SnapshotCatalog:
         snap_id = (max(existing) + 1) if existing else 1
         path = os.path.join(tdir, f"snap-{snap_id}")
 
-        t0 = time.time()
+        t0 = time.monotonic()
         df.write.mode("overwrite").parquet(path)
-        wall_ms = int((time.time() - t0) * 1000)
+        wall_ms = int((time.monotonic() - t0) * 1000)
 
         manifest = {
             "table": table,

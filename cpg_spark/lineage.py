@@ -85,8 +85,11 @@ def read_lineage(spark: SparkSession, warehouse: str) -> DataFrame:
 
 
 class StageTimer:
+    """Milliseconds since construction, on the monotonic clock, so a
+    wall-clock step during a stage cannot skew its time."""
+
     def __init__(self) -> None:
-        self.t0 = time.time()
+        self.t0 = time.monotonic()
 
     def wall_ms(self) -> int:
-        return int((time.time() - self.t0) * 1000)
+        return int((time.monotonic() - self.t0) * 1000)

@@ -14,6 +14,13 @@ reads it. It runs at three boundaries — each `fixpoint` round and stop,
 each registry entry's return (queries.py) and each stage commit
 (plans/pipeline.py) — and operators carry no release code: a direct
 caller of an operator owns the checkpoints of the frame it is handed.
+
+The snapshot is of the process-wide persisted set, so the rule assumes
+that nothing else takes or frees checkpoints between the snapshot and
+the release. Pipeline stages that commit concurrently keep to that:
+their builds (with every `fixpoint` inside them) run one at a time, and
+a stage commit passes the frames other stages are still writing as
+live, so it frees none of their checkpoints.
 """
 
 from __future__ import annotations

@@ -1,11 +1,21 @@
 """The end-to-end KG-construction pipeline as a resumable stage DAG.
 
-Stage order (the reference's topologically-ordered pass list,
-TranslationConfiguration.kt:663-704, made explicit):
+Stage graph (the reference's pass dependencies,
+TranslationConfiguration.kt:663-704, made explicit); an arrow reads
+"is read by":
 
-    pages -> sentences -> mentions -> links          (map-heavy)
-          -> components (from alias dict)            (shuffle-heavy CC)
-          -> triples -> triples_agg / nodes          (salted materialize)
+    pages -> sentences -> mentions -> links --+--> triples -> triples_agg
+                                              |
+    alias dict -> components -----------------+--> nodes
+
+    (sentences/mentions/links: map-heavy; components: the dictionary CC;
+     triples/triples_agg/nodes: salted materialize)
+
+Each stage starts once the stages it reads have committed, so
+independent stages commit concurrently: `components` overlaps
+sentences -> mentions -> links, and `nodes` overlaps triples ->
+triples_agg. The critical path is sentences -> mentions -> links ->
+triples -> triples_agg.
 
 Explicit repartitioning sits between the map-heavy extract phase and the
 shuffle-heavy canonicalize/merge phase (north_rule requirement): extract
@@ -22,9 +32,11 @@ barrier and the next run resumes from the last committed snapshot.
 from __future__ import annotations
 
 import hashlib
-from functools import partial
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ..catalog import SnapshotCatalog
 from ..lineage import StageTimer, append_lineage, partition_counts
@@ -35,6 +47,13 @@ from ..synth import TARGET_LANGS
 PIPELINE_VERSION = "1"
 
 STAGES = ("sentences", "mentions", "links", "components", "triples", "triples_agg", "nodes")
+
+# The release rule diffs the process-wide persisted set against a
+# snapshot, so concurrent stages share one lock around every build (and
+# the hidden actions and fixpoint releases in it) and every commit
+# release, and the frames built but not yet written stay live.
+_BUILD = threading.Lock()
+_IN_FLIGHT: list[DataFrame] = []
 
 
 class StagedPipeline:
@@ -55,21 +74,42 @@ class StagedPipeline:
     ) -> dict[str, DataFrame]:
         """Run (or resume) ``dag``: ``(name, upstream, build)`` entries in
         topological order. A stage's fingerprint chains ``tokens``, its
-        name and its upstream stages' fingerprints; ``build(out)`` gets
-        the committed frames of the stages before it. Returns
-        {stage: DataFrame} for every stage up to ``stop_after``."""
+        name and its upstream stages' fingerprints. Each stage runs on
+        its own driver thread, which inherits the caller's Spark local
+        properties (job group, description), as soon as its upstream
+        stages have committed, so independent stages commit
+        concurrently and Spark interleaves their jobs; ``build(o)``
+        gets the committed frames of the stage's transitive upstream
+        only, so reading any other stage raises ``KeyError``. Once every
+        started stage has finished, the first failed stage's error (in
+        DAG order) is raised. Returns {stage: DataFrame} for every stage
+        up to ``stop_after``, in DAG order; ``ran`` and ``skipped`` list
+        the stages in DAG order too."""
         names = [name for name, _, _ in dag]
-        if stop_after is not None and stop_after not in names:
-            raise ValueError(f"stop_after={stop_after!r} is not a stage; stages: {names}")
+        if stop_after is not None:
+            if stop_after not in names:
+                raise ValueError(f"stop_after={stop_after!r} is not a stage; stages: {names}")
+            dag = dag[: names.index(stop_after) + 1]
         fps: dict[str, str] = {}
-        out: dict[str, DataFrame] = {}
-        for name, upstream, build in dag:
+        ancestors: dict[str, set[str]] = {}
+        for name, upstream, _ in dag:
             parts = (*tokens, name, *(fps[u] for u in upstream))
             fps[name] = hashlib.sha1("\x00".join(parts).encode()).hexdigest()
-            out[name] = self._stage(name, fps[name], partial(build, out), input_token)
-            if name == stop_after:
-                break
-        return out
+            ancestors[name] = set(upstream).union(*(ancestors[u] for u in upstream))
+        ran, skipped = len(self.ran), len(self.skipped)
+        futures = {}
+
+        def task(name, build):
+            o = {a: futures[a].result() for a in ancestors[name]}
+            return self._stage(name, fps[name], lambda: build(o), input_token)
+
+        with ThreadPoolExecutor(max_workers=len(dag)) as pool:
+            for name, _, build in dag:
+                target = inheritable_thread_target(self.spark)(task)
+                futures[name] = pool.submit(target, name, build)
+        for done, start in ((self.ran, ran), (self.skipped, skipped)):
+            done[start:] = sorted(done[start:], key=names.index)
+        return {name: f.result() for name, f in futures.items()}
 
     def _stage(
         self,
@@ -82,21 +122,37 @@ class StagedPipeline:
         snapshot. Beyond any action ``compute`` takes while building its
         plan, the snapshot write is the stage's only Spark action: the
         frame is not cached, the lineage counts come from the written
-        files' footers, and the driver writes the lineage rows. The
-        commit is a release boundary (iterutil.release) with no live
-        frame: the snapshot is read back from its files, so every local
-        checkpoint taken while building the plan is released once the
-        write returns."""
+        files' footers, and the driver writes the lineage rows.
+
+        Builds are serialized (one lock for every pipeline in the
+        process) and writes are not: a build, with the actions it
+        takes, runs beside other stages' writes but never beside
+        another build. The commit is a release boundary
+        (iterutil.release) whose live frames are the frames built but
+        not yet written: the snapshot is read back from its files, so
+        once the write returns every local checkpoint taken since this
+        build began is released unless another stage's write still
+        reads it. A snapshot write persists nothing, so the rule stays
+        exact. The lineage ``wall_ms`` runs from this call, i.e. from
+        the moment the stage's upstream stages have committed, and
+        includes any wait for the build lock."""
         if self.catalog.has_snapshot(name, fingerprint):
             self.skipped.append(name)
             return self.catalog.read(self.spark, name)
         timer = StageTimer()
         sc = self.spark.sparkContext
-        since = iterutil.persisted_ids(sc)
-        manifest = self.catalog.write(
-            compute(), name, fingerprint, stage=name, run_id=self.run_id
-        )
-        iterutil.release(sc, since)
+        with _BUILD:
+            since = iterutil.persisted_ids(sc)
+            built = compute()
+            _IN_FLIGHT.append(built)
+        try:
+            manifest = self.catalog.write(
+                built, name, fingerprint, stage=name, run_id=self.run_id
+            )
+        finally:
+            with _BUILD:
+                _IN_FLIGHT.remove(built)
+                iterutil.release(sc, since, *_IN_FLIGHT)
         df = self.catalog.read(self.spark, name)
         append_lineage(
             self.spark,

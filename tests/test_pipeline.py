@@ -4,12 +4,16 @@ lineage rows — the north_rule requirements."""
 
 import json
 import os
+import sys
 import tempfile
+import threading
+from functools import partial
 
 import pytest
 
 from cpg_spark.lineage import append_lineage, read_lineage
-from cpg_spark.plans.pipeline import STAGES, KgPipeline
+from cpg_spark.operators import canonicalize, iterutil
+from cpg_spark.plans.pipeline import STAGES, KgPipeline, StagedPipeline
 
 
 def _triple_set(df):
@@ -135,51 +139,208 @@ def test_empty_stage_lineage_is_one_zero_row(spark, pages_df):
     assert rows == [(0, 0)]
 
 
-def test_stage_commit_is_one_execution_and_keeps_no_blocks(
-    spark, pages_df, alias_df, last_execution_id
-):
+def _executions_by_description(spark) -> dict[str, int]:
+    """SQL executions of the session's status store, counted by their
+    description — the job description they started under."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    counts: dict[str, int] = {}
+    for i in range(execs.size()):
+        desc = execs.apply(i).description()
+        counts[desc] = counts.get(desc, 0) + 1
+    return counts
+
+
+def test_stage_commit_is_one_execution_and_keeps_no_blocks(spark, pages_df, alias_df):
     """Committing a map stage runs one SQL execution (the snapshot
-    write), and a stage commit persists no blocks: none are added
-    between building the stage's plan and its write, and the local
-    checkpoints an operator takes while its plan is built (the
-    connected-components edge checkpoint) are released once the
-    snapshot is written, so every commit leaves the blocks as it found
-    them."""
+    write), and a stage commit keeps no blocks: a stage's build persists
+    only blocks its own frame reads (the local checkpoints an operator
+    takes while its plan is built), and those are released once the
+    snapshot is written, so the run ends holding no block it persisted.
+    Stages commit concurrently, so each stage runs under its own job
+    group and its executions are the ones started under that group's
+    description; builds are serialized, so the blocks a build adds are
+    its own."""
     sc = spark.sparkContext
-
-    def persisted():
-        return set(sc._jsc.getPersistentRDDs().keySet())
-
     pages_df.count(), alias_df.count()  # fill the fixtures' own caches first
-    pipe = KgPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="ex")
-    stage, write = pipe._stage, pipe.catalog.write
-    seen: dict[str, list] = {}
-    executions = {}
-
-    def watched_write(df, name, *args, **kwargs):
-        seen[name].append(persisted())
-        return write(df, name, *args, **kwargs)
+    wh = tempfile.mkdtemp(prefix="kgwh_")
+    pipe = KgPipeline(spark, wh, run_id="ex")
+    stage, tag = pipe._stage, os.path.basename(wh)
+    unread: dict[str, set] = {}
 
     def watched(name, fingerprint, compute, input_split):
-        before = persisted()
-
         def built():
+            before = iterutil.persisted_ids(sc)
             df = compute()
-            seen[name] = [persisted()]
+            unread[name] = iterutil.persisted_ids(sc) - before - iterutil._reads([df])
             return df
 
-        x0 = last_execution_id()
-        out = stage(name, fingerprint, built, input_split)
-        seen[name] += [persisted(), before]
-        executions[name] = last_execution_id() - x0
+        sc.setJobGroup(f"{tag}.{name}", f"{tag}.{name}")
+        try:
+            return stage(name, fingerprint, built, input_split)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    before = iterutil.persisted_ids(sc)
+    pipe._stage = watched
+    pipe.run(pages_df, alias_df, input_token="tok-ex")
+    # the run ends holding no block it persisted; the set it started with
+    # may have shrunk, as Spark's ContextCleaner can drop the blocks of
+    # earlier tests' collected frames at any moment, while a commit
+    # releases only what was persisted after its own snapshot
+    assert iterutil.persisted_ids(sc) - before == set()
+    assert unread == {s: set() for s in STAGES}
+    assert _executions_by_description(spark).get(f"{tag}.sentences") == 1
+
+
+def test_commit_release_keeps_what_frames_in_flight_read(
+    spark, pages_df, alias_df, corpus, monkeypatch
+):
+    """A commit releases only what no frame still being written reads.
+    With the driver thresholds at 0, `components` is solved by the CC
+    star loop, so its frame reads the loop's local checkpoints. Its
+    build starts once `sentences` is built and its write waits until
+    `sentences` has committed, so `sentences`' commit release runs
+    while `components` is in flight, after `components` took its
+    checkpoints. The release must keep them: the run completes with
+    the golden triples and ends holding no block it persisted."""
+    cc = canonicalize.connected_components
+    monkeypatch.setattr(canonicalize, "DRIVER_THRESHOLD", 0)
+    monkeypatch.setattr(canonicalize, "connected_components", partial(cc, driver_threshold=0))
+    sc = spark.sparkContext
+    pages_df.count(), alias_df.count()  # fill the fixtures' own caches first
+    pipe = KgPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="inflight")
+    stage, write = pipe._stage, pipe.catalog.write
+    built, committed = threading.Event(), threading.Event()
+    held: list[set] = []
+
+    def ordered(name, fingerprint, compute, input_split):
+        if name == "components":
+            assert built.wait(60), "sentences was not built"
+
+        def build():
+            df = compute()
+            if name == "sentences":
+                built.set()
+            return df
+
+        try:
+            return stage(name, fingerprint, build, input_split)
+        finally:
+            if name == "sentences":
+                committed.set()
+
+    def held_write(df, name, *args, **kwargs):
+        if name == "components":
+            held.append(iterutil._reads([df]) & iterutil.persisted_ids(sc))
+            assert committed.wait(60), "sentences did not commit"
+        return write(df, name, *args, **kwargs)
+
+    before = iterutil.persisted_ids(sc)
+    pipe._stage, pipe.catalog.write = ordered, held_write
+    out = pipe.run(pages_df, alias_df, input_token="tok-inflight")
+    assert held and held[0]  # components was written over local checkpoints
+    assert _triple_set(out["triples"]) == _golden_set(corpus)
+    assert iterutil.persisted_ids(sc) - before == set()
+
+
+def test_independent_stages_overlap(spark, pages_df, alias_df, corpus):
+    """`components` reads only the alias dictionary, so it commits while
+    `sentences` waits for it; run one after another, the stages would
+    never get past the wait."""
+    pipe = KgPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="overlap")
+    stage = pipe._stage
+    components_done = threading.Event()
+
+    def gated(name, *args):
+        if name == "sentences":
+            assert components_done.wait(60), "components did not commit first"
+        out = stage(name, *args)
+        if name == "components":
+            components_done.set()
         return out
 
-    pipe._stage, pipe.catalog.write = watched, watched_write
-    pipe.run(pages_df, alias_df, input_token="tok-ex")
-    assert list(seen) == list(STAGES)
-    for name, (built, at_write, committed, before) in seen.items():
-        assert at_write == built and committed == before, name
-    assert executions["sentences"] == 1
+    pipe._stage = gated
+    out = pipe.run(pages_df, alias_df, input_token="tok-overlap")
+    assert pipe.ran == list(STAGES)
+    assert _triple_set(out["triples"]) == _golden_set(corpus)
+
+
+def test_failed_stage_raises_after_the_stages_in_flight(spark, pages_df, alias_df, corpus):
+    """A failed build fails the stages downstream of it, but an
+    independent stage still commits: `run` raises the error once every
+    stage has finished, leaves no stage thread behind, and the rerun
+    skips what committed."""
+    wh = tempfile.mkdtemp(prefix="kgwh_")
+    pipe = KgPipeline(spark, wh, run_id="fail")
+    stage = pipe._stage
+
+    def broken():
+        raise RuntimeError("sentences build failed")
+
+    def failing(name, fingerprint, compute, input_split):
+        return stage(name, fingerprint, broken if name == "sentences" else compute, input_split)
+
+    pipe._stage = failing
+    threads = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="sentences build failed"):
+        pipe.run(pages_df, alias_df, input_token="tok-fail")
+    assert set(threading.enumerate()) <= threads
+    assert pipe.ran == ["components"]
+
+    rerun = KgPipeline(spark, wh, run_id="fail-rerun")
+    out = rerun.run(pages_df, alias_df, input_token="tok-fail")
+    assert rerun.skipped == ["components"]
+    assert rerun.ran == [s for s in STAGES if s != "components"]
+    assert _triple_set(out["triples"]) == _golden_set(corpus)
+
+
+def test_build_reads_only_its_upstream(spark):
+    """A build is handed the frames of its transitive upstream only, so
+    reading another stage is a KeyError, not a race."""
+    pipe = StagedPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="keys")
+    dag = (
+        ("a", (), lambda o: spark.range(3)),
+        ("b", ("a",), lambda o: o["a"].selectExpr("id + 1 AS id")),
+        ("c", ("b",), lambda o: o["a"].union(o["b"])),
+        ("d", (), lambda o: o["a"]),
+    )
+    with pytest.raises(KeyError, match="'a'"):
+        pipe._run(dag, ("tok-keys",), "tok-keys", None)
+    assert pipe.ran == ["a", "b", "c"]
+
+
+def test_many_concurrent_stages_keep_their_checkpoints(spark):
+    """More concurrent stages than cores, each built over a local
+    checkpoint of its own, with a short thread switch interval: every
+    write must still find its checkpoint (a commit that released
+    another stage's would fail that stage's write), and the run ends
+    holding no block it persisted."""
+    sc = spark.sparkContext
+
+    def build(i):
+        return lambda o: iterutil.ckpt(spark.range(40).selectExpr(f"id * {i} AS v")).filter("v % 3 = 0")
+
+    dag = tuple((f"s{i}", (), build(i)) for i in range(8))
+    pipe = StagedPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="stress")
+    before = iterutil.persisted_ids(sc)
+    out: dict = {}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        runner = threading.Thread(
+            target=lambda: out.update(pipe._run(dag, ("tok-stress",), "tok-stress", None))
+        )
+        runner.start()
+        runner.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not runner.is_alive()
+    assert pipe.ran == [name for name, _, _ in dag]
+    got = {name: sorted(r["v"] for r in df.collect()) for name, df in out.items()}
+    assert got == {f"s{i}": sorted(v * i for v in range(40) if v * i % 3 == 0) for i in range(8)}
+    assert iterutil.persisted_ids(sc) - before == set()
 
 
 # Spark jobs per stage of a fresh run on the fixture corpus: the
