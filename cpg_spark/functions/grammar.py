@@ -323,7 +323,10 @@ class Grammar:
         return nt
 
     def add_prod(self, nt: int, symbols: tuple) -> None:
-        assert len(symbols) <= 2, "normal form: at most two symbols"
+        if len(symbols) > 2:
+            raise ValueError(
+                f"normal form: at most two symbols per production, got {len(symbols)}"
+            )
         self.prods[nt].append(tuple(symbols))
 
     def nts(self) -> list[int]:

@@ -139,13 +139,17 @@ def cms_counters(
     group_cols: list[str],
     w: int = 1 << 12,
     depth: int = CMS_DEPTH,
+    count: Column | None = None,
 ) -> DataFrame:
     """(group..., row, slot, c): Count-Min counter table — ONE
     combinable integer-sum aggregation over depth*|rows| update pairs
     (each value explodes to `depth` (row, slot) increments in the
     scan). Merging two corpora's sketches is elementwise +, the
     append-only contract. Size is bounded by depth*w counters per
-    group regardless of corpus size."""
+    group regardless of corpus size. With `count`, each row stands
+    for `count` occurrences of its value (pre-aggregated input, one
+    row per distinct value): the counters are the same integers,
+    hashed once per distinct value instead of once per occurrence."""
     h1 = avalanche32_col(char_poly_hash_col(value))
     h2 = avalanche32_col(char_poly_hash2_col(value))
     rows = F.array(
@@ -160,11 +164,13 @@ def cms_counters(
             for i in range(depth)
         ]
     )
+    n = F.lit(1) if count is None else count
     return (
-        df.select(*group_cols, F.explode(rows).alias("rs"))
+        df.select(*group_cols, n.cast("long").alias("_n"),
+                  F.explode(rows).alias("rs"))
         .groupBy(*group_cols, F.col("rs.row").alias("row"),
                  F.col("rs.slot").alias("slot"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .agg(F.sum("_n").alias("c"))
     )
 
 

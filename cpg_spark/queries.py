@@ -5325,20 +5325,25 @@ def q_ts_cms_heavy(spark, sf_dir):
     is a min over d counters — never under, over only by collision
     mass. Tokens with exact count >= 50 are probed with the exact
     count riding along, so the one-sided error is visible in the
-    result; everything integer, bit-exact under the oracle."""
+    result; everything integer, bit-exact under the oracle. Tokens are
+    counted once; the counters are built from the distinct tokens
+    weighted by those counts, and the exact side reuses them."""
     from .operators import sketches
 
     docs = t_par(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.lit("corpus").alias("scope"),
-        F.explode(textstats.doc_tokens(F.col("text"))).alias("tok"),
+    counts = (
+        docs.select(
+            F.lit("corpus").alias("scope"),
+            F.explode(textstats.doc_tokens(F.col("text"))).alias("tok"),
+        )
+        .groupBy("scope", "tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("exact_count"))
     )
     counters = sketches.cms_counters(
-        toks, F.col("tok"), ["scope"], w=_CMS_W, depth=_CMS_D
+        counts, F.col("tok"), ["scope"], w=_CMS_W, depth=_CMS_D,
+        count=F.col("exact_count"),
     )
-    exact = toks.groupBy("scope", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_count")
-    ).filter(F.col("exact_count") >= _CMS_MIN_COUNT)
+    exact = counts.filter(F.col("exact_count") >= _CMS_MIN_COUNT)
     est = sketches.cms_estimate(
         counters,
         exact.select("scope", "tok"),

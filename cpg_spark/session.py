@@ -4,6 +4,27 @@ Local mode is the test stand-in for a multi-executor cluster; every knob
 here is chosen to behave the same way on a real cluster (AQE on, shuffle
 partitions sized to parallelism, UTC timestamps for oracle parity,
 Arrow enabled for the pandas-UDF slow path).
+
+ICU case mappings are off (``spark.sql.icu.caseMappings.enabled=false``),
+so ``lower()`` takes the JDK path (``UTF8String.toLowerCase``). With them
+on (Spark 4's default) the first ``lower()`` in a JVM initialises
+``CollationAwareUTF8String``, which builds a title-case table over every
+Unicode code point while the other task threads wait on the class-init
+lock: the first pipeline call in a driver paid about 1 s of wall time for
+it, and about 270 MB more peak RSS from the allocation churn. The
+package's only case mapping is ``lower`` (tokens, alias keys, dedup keys);
+it calls no ``upper``, ``initcap`` or collation.
+
+Both paths lower ASCII by the same ``toLowerCaseAscii``, so ASCII output
+is byte-identical; the benchmark corpora and test data are ASCII. Non-ASCII
+input goes through ``String.toLowerCase()`` in the JVM's default locale
+instead of ICU's root locale. The two agree on final sigma, dotted capital
+I, the Kelvin sign, capital sharp s, Deseret, fullwidth and Cyrillic
+letters, and on malformed UTF-8. Known differences: U+10570 (Vithkuqi)
+and U+A7C0, whose case pairs are newer than the JDK 17 Unicode tables
+(JDK lowering leaves them unchanged). A tr, az or lt default locale also
+changes how non-ASCII strings containing ``I`` lower. ``extra_conf`` can
+turn ICU back on like any other conf.
 """
 
 from __future__ import annotations
@@ -59,6 +80,9 @@ def get_spark(
         # bad page kills the job) — REPLACE with U+FFFD instead (the
         # failOnError=false analog, reference TranslationManager.kt:347)
         .config("spark.sql.legacy.codingErrorAction", "true")
+        # lower() by the JDK, not ICU: skips ICU's once-per-JVM title-case
+        # table (see the module docstring for what changes)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", mem)

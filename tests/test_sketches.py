@@ -126,6 +126,14 @@ def test_cms_never_undercounts_and_is_mergeable(spark):
     got = {(r["row"], r["slot"]): r["c"] for r in merged.collect()}
     exp = {(r["row"], r["slot"]): r["c"] for r in counters.collect()}
     assert got == exp
+    # pre-aggregated input: one row per distinct value, weighted by its
+    # count, gives the same counters
+    counted = full.groupBy("g", "v").agg(F.count(F.lit(1)).alias("n"))
+    weighted = sketches.cms_counters(
+        counted, F.col("v"), ["g"], w=1 << 12, count=F.col("n")
+    )
+    assert {(r["row"], r["slot"]): r["c"] for r in weighted.collect()} == exp
+    assert dict(weighted.dtypes)["c"] == "bigint"
 
 
 def test_bloom_one_sided_membership(spark):

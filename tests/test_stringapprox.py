@@ -112,6 +112,16 @@ def test_regular_grammar_stays_exact():
     assert not _full(rx, "a") and not _full(rx, "ba")
 
 
+def test_add_prod_rejects_more_than_two_symbols():
+    """The grammar is in normal form: a longer right-hand side is a
+    ValueError and adds nothing."""
+    g = Grammar()
+    x = g.add_nt("X")
+    with pytest.raises(ValueError, match="at most two symbols"):
+        g.add_prod(x, ((T, "a"), (N, x), (T, "b")))
+    assert g.prods[x] == []
+
+
 def test_left_linear_exact():
     g = Grammar()
     x = g.add_nt("X")
