@@ -135,7 +135,10 @@ def _pow31_table_col() -> Column:
     round trips (~0.15 s) per call, and the table is embedded in every
     composed-hash kernel — Column trees are immutable and data-free, so
     sharing one instance across plans is safe (lambda variables are
-    resolved fresh per plan at analysis time)."""
+    resolved fresh per plan at analysis time). It lives as long as the
+    process, not the session: PySpark keeps one py4j gateway (one JVM)
+    per process and a Column references no session, so a memo built
+    before `spark.stop()` resolves unchanged in the next session."""
     return F.expr(
         "array(" + ", ".join(f"{x}L" for x in _POW31) + ")"
     )

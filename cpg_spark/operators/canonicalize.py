@@ -21,7 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..schema import local_frame
 from .iterutil import ckpt, closure, counted, fixpoint
 
 # at or under this many edges (connected_components, scc) or alias groups
@@ -93,19 +95,11 @@ def _union_roots(groups) -> dict:
 
 def _pairs_frame(spark, pairs, dtype, nullable: bool = True) -> DataFrame:
     """(member_id, component_id) rows computed on the driver, as a local
-    relation built from an Arrow table: its plan is a LocalTableScan,
-    where `createDataFrame` of a row list parallelizes pickled rows
-    through a Python worker."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructField, StructType
-
+    relation (see schema.local_frame)."""
     cols = ("member_id", "component_id")
-    at = to_arrow_type(dtype)
-    values = tuple(zip(*pairs)) or ((), ())
-    table = pa.table({c: pa.array(v, at) for c, v in zip(cols, values)})
-    schema = StructType([StructField(c, dtype, nullable) for c in cols])
-    return spark.createDataFrame(table, schema)
+    return local_frame(
+        spark, pairs, T.StructType([T.StructField(c, dtype, nullable) for c in cols])
+    )
 
 
 def _unionfind_driver(e: DataFrame) -> DataFrame:

@@ -110,7 +110,11 @@ def _shingle_text_col(n: int = DEFAULT_SHINGLE_N) -> Column:
     driver-side tax every query invocation used to pay (measured: ~29 s
     of the sf0.1 headline was Python-side Column construction,
     OPTIMIZATION_r07.md). Sharing one instance across plans is safe:
-    analysis resolves lambda variables fresh per plan."""
+    analysis resolves lambda variables fresh per plan. So is keeping it
+    for the process's lifetime rather than a session's: PySpark keeps
+    one py4j gateway per process and a Column references no session, so
+    the memo built before `spark.stop()` gives the same rows in the next
+    `get_spark()` session (tests/test_memoized_columns.py)."""
     return shingle_hash_array(F.col("text"), n)
 
 

@@ -152,95 +152,6 @@ def jsonld_triples(pages: DataFrame, id_col: str = "url") -> DataFrame:
     return good.unionByName(bad)
 
 
-def sentence_order_edges(sent_df: DataFrame) -> DataFrame:
-    """Per-page EOG: (url, src_idx, dst_idx) linking consecutive sentences
-    — the EvaluationOrderGraphPass analog (reference
-    EvaluationOrderGraphPass.kt:75-205 chains statements per function).
-    Window-lag formulation: JVM-side, whole-stage codegen'd; the
-    applyInPandas twin below exists to golden-test the grouped-map path."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("url").orderBy("sent_idx")
-    return (
-        sent_df.withColumn("src_idx", F.lag("sent_idx").over(w))
-        .filter(F.col("src_idx").isNotNull())
-        .select("url", F.col("src_idx").cast("int"), F.col("sent_idx").alias("dst_idx"))
-    )
-
-
-EOG_EDGE_SCHEMA = "url string, src_idx int, dst_idx int"
-
-
-def sentence_order_edges_pandas(sent_df: DataFrame) -> DataFrame:
-    """Grouped-map twin of sentence_order_edges: per-page sequential
-    construction inside applyInPandas — the pattern for per-document
-    algorithms a window can't express (the reference's per-function EOG
-    builder with branching would go here). Golden-tested equal to the
-    window formulation."""
-    import pandas as pd
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = sorted(pdf["sent_idx"].tolist())
-        url = pdf["url"].iloc[0]
-        return pd.DataFrame(
-            {
-                "url": [url] * max(0, len(idx) - 1),
-                "src_idx": idx[:-1],
-                "dst_idx": idx[1:],
-            }
-        )
-
-    return sent_df.select("url", "sent_idx").groupBy("url").applyInPandas(
-        build, EOG_EDGE_SCHEMA
-    )
-
-
-def sentence_order_edges_branched(sent_df: DataFrame) -> DataFrame:
-    """Branched per-page EOG emitted from the REAL corpus — the
-    EvaluationOrderGraphPass branch emission (reference
-    EvaluationOrderGraphPass.kt:872-877 attaches BRANCH properties to
-    edges out of ~40 conditional node kinds). The corpus analog of a
-    conditional is an interrogative sentence (ending '?'): it emits a
-    true-branch edge to the next sentence and a false-branch edge
-    skipping one, with the guard condition CONSTANT-FOLDED from the text
-    itself (even character count — deterministic, the ValueEvaluator
-    fold the UnreachableEOGPass consumes). Declarative sentences emit
-    the plain linear edge (branch/cond_value NULL = unconditional).
-
-    Returns (url, src_idx, dst_idx, branch, cond_value) — feed through
-    flag_unreachable_edges + bfs_reach for dead-branch elimination over
-    extracted pages. Window-lead formulation: one sort per page
-    partition, whole-stage codegen, no self-join."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("url").orderBy("sent_idx")
-    guard = F.col("sentence").endswith("?")
-    cond = (F.length("sentence") % 2 == 0).alias("cond_value")
-    base = sent_df.select(
-        "url",
-        F.col("sent_idx").cast("int").alias("src_idx"),
-        F.lead("sent_idx", 1).over(w).cast("int").alias("__n1"),
-        F.lead("sent_idx", 2).over(w).cast("int").alias("__n2"),
-        guard.alias("__guard"),
-        cond,
-    )
-    nulls = F.lit(None).cast("string")
-    nullb = F.lit(None).cast("boolean")
-    linear = base.filter(~F.col("__guard") & F.col("__n1").isNotNull()).select(
-        "url", "src_idx", F.col("__n1").alias("dst_idx"),
-        nulls.alias("branch"), nullb.alias("cond_value"),
-    )
-    br_true = base.filter(F.col("__guard") & F.col("__n1").isNotNull()).select(
-        "url", "src_idx", F.col("__n1").alias("dst_idx"),
-        F.lit("true").alias("branch"), F.col("cond_value"),
-    )
-    br_false = base.filter(F.col("__guard") & F.col("__n2").isNotNull()).select(
-        "url", "src_idx", F.col("__n2").alias("dst_idx"),
-        F.lit("false").alias("branch"), F.col("cond_value"),
-    )
-    return linear.unionByName(br_true).unionByName(br_false)
-
-
 def flag_unreachable_edges(
     edges: DataFrame,
     cond_col: str = "cond_value",

@@ -133,6 +133,24 @@ def hll_distinct(
 CMS_DEPTH = 4
 
 
+def _cms_slots(value: Column, w: int, depth: int) -> Column:
+    """array<struct<row, slot>>: the `depth` Count-Min cells `value`
+    updates or probes, slot_i = av((h1 + i*h2) mod 2^32) mod w."""
+    h1 = avalanche32_col(char_poly_hash_col(value))
+    h2 = avalanche32_col(char_poly_hash2_col(value))
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("row"),
+                (avalanche32_col((h1 + F.lit(i) * h2) % F.lit(1 << 32)) % w).alias(
+                    "slot"
+                ),
+            )
+            for i in range(depth)
+        ]
+    )
+
+
 def cms_counters(
     df: DataFrame,
     value: Column,
@@ -150,24 +168,10 @@ def cms_counters(
     for `count` occurrences of its value (pre-aggregated input, one
     row per distinct value): the counters are the same integers,
     hashed once per distinct value instead of once per occurrence."""
-    h1 = avalanche32_col(char_poly_hash_col(value))
-    h2 = avalanche32_col(char_poly_hash2_col(value))
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("row"),
-                (
-                    avalanche32_col((h1 + F.lit(i) * h2) % F.lit(1 << 32))
-                    % w
-                ).alias("slot"),
-            )
-            for i in range(depth)
-        ]
-    )
     n = F.lit(1) if count is None else count
     return (
         df.select(*group_cols, n.cast("long").alias("_n"),
-                  F.explode(rows).alias("rs"))
+                  F.explode(_cms_slots(value, w, depth)).alias("rs"))
         .groupBy(*group_cols, F.col("rs.row").alias("row"),
                  F.col("rs.slot").alias("slot"))
         .agg(F.sum("_n").alias("c"))
@@ -188,27 +192,10 @@ def cms_estimate(
     collisions <= eps*N with prob 1-delta). All integer: exact,
     combinable, order-free, bit-replayable. Returns
     (group..., value, est_count)."""
-    h1 = avalanche32_col(char_poly_hash_col(value))
-    h2 = avalanche32_col(char_poly_hash2_col(value))
     probes = queries.select(
         *group_cols,
         value.alias("value"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        (
-                            avalanche32_col(
-                                (h1 + F.lit(i) * h2) % F.lit(1 << 32)
-                            )
-                            % w
-                        ).alias("slot"),
-                    )
-                    for i in range(depth)
-                ]
-            )
-        ).alias("rs"),
+        F.explode(_cms_slots(value, w, depth)).alias("rs"),
     ).select(
         *group_cols, "value",
         F.col("rs.row").alias("row"), F.col("rs.slot").alias("slot"),

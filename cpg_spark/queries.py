@@ -31,6 +31,7 @@ from .functions.hashing import (
     char_poly_hash_sql,
 )
 from .operators import canonicalize, dedup, iterutil, similarity, textstats
+from .schema import local_frame
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -49,33 +50,19 @@ _SCAN_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The scan of `sf_dir/name.parquet`, one plan per (session, table).
+
+    Assumes the tables under `sf_dir` are static for the session's
+    lifetime: the cached plan pins the file listing and the schema
+    inferred at the first read, so a table rewritten in the same session
+    can fail on a missing file or be read with its old schema. Reading
+    a rewritten table needs a new session or `spark.read.parquet`."""
     key = (sf_dir, name)
     hit = _SCAN_CACHE.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _SCAN_CACHE[key] = (spark, df)
-    return df
-
-
-# same contract for the constant fixture frames (DFA transition tables,
-# probe lists, the entity alias dictionary): createDataFrame of a
-# hard-coded literal list costs ~0.15-0.25 s of driver time per call;
-# the rows are compile-time constants, so one local-relation plan per
-# session is the same frame every time. The rows and schema string are
-# stored beside the frame: a call that reuses a key with different ones
-# raises instead of being served the other call's frame.
-_CONST_CACHE: dict[str, tuple[SparkSession, DataFrame, str, list]] = {}
-
-
-def _const_df(spark: SparkSession, key: str, rows, schema: str) -> DataFrame:
-    hit = _CONST_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        if (hit[2], hit[3]) != (schema, rows):
-            raise ValueError(f"_const_df key {key!r} reused with different rows or schema")
-        return hit[1]
-    df = spark.createDataFrame(rows, schema)
-    _CONST_CACHE[key] = (spark, df, schema, rows)
     return df
 
 
@@ -916,10 +903,7 @@ def q_events_order_dfa(spark, sf_dir):
         + [("S1", "p", "S2")]
         + [("S2", a, "S2") for a in "cevsp"]
     )
-    dfa = _const_df(
-        spark, "purchase_dfa", rows,
-        "src_state string, symbol string, dst_state string",
-    )
+    dfa = local_frame(spark, rows, "src_state string, symbol string, dst_state string")
     return dfa_evaluate(
         ev,
         dfa,
@@ -1298,9 +1282,8 @@ def q_eog_dfa_branched(spark, sf_dir):
     ).select(
         "doc_id", F.col("e.src").alias("src"), F.col("e.dst").alias("dst")
     )
-    transitions = _const_df(
+    transitions = local_frame(
         spark,
-        "parity_dfa",
         [
             ("S0", "e", "S0"),
             ("S1", "e", "S1"),
@@ -1396,10 +1379,7 @@ WHERE o.src IS NULL
 
 def _doc_entity_dict(spark: SparkSession) -> DataFrame:
     rows = [(w, typ, f"e:{w}") for w, typ in DOC_ENTITIES.items()]
-    return _const_df(
-        spark, "doc_entity_dict", rows,
-        "alias string, entity_type string, entity_id string",
-    )
+    return local_frame(spark, rows, "alias string, entity_type string, entity_id string")
 
 
 def q_kg_doc_mentions(spark, sf_dir):
@@ -1658,7 +1638,7 @@ def q_link_scope_chain(spark, sf_dir):
         .union(cust.filter(m == 0).select(k, F.lit("y")))
         .union(cust.filter(m == 2).select(k, F.lit("x")))
     )
-    names = _const_df(spark, "xyz_names", [("x",), ("y",), ("z",)], "name string")
+    names = local_frame(spark, [("x",), ("y",), ("z",)], "name string")
     refs = (
         cust.filter(m == 2)
         .select(k.alias("scope_id"))
@@ -1723,7 +1703,7 @@ def q_link_scope_inferred(spark, sf_dir):
         .union(cust.filter(m == 0).select(k, F.lit("y")))
         .union(cust.filter(m == 2).select(k, F.lit("x")))
     )
-    names = _const_df(spark, "xyz_names", [("x",), ("y",), ("z",)], "name string")
+    names = local_frame(spark, [("x",), ("y",), ("z",)], "name string")
     refs = (
         cust.filter(m == 2)
         .select(k.alias("scope_id"))
@@ -1905,9 +1885,7 @@ def q_sa_grammar_accept(spark, sf_dir):
         ).alias("p"),
     ).select("hotspot_id", "p.*")
     pats = stringapprox.grammar_patterns(prods)
-    probes = _const_df(
-        spark, "grammar_probes", [(p,) for p in _GRAMMAR_PROBES], "probe string"
-    )
+    probes = local_frame(spark, [(p,) for p in _GRAMMAR_PROBES], "probe string")
     return pats.crossJoin(F.broadcast(probes)).select(
         "hotspot_id",
         "probe",
@@ -2415,9 +2393,7 @@ def q_sa_dfg_grammar(spark, sf_dir):
     hotspots = nation.select(hid.alias("hotspot_id"), (base + 3).alias("node_id"))
     prods = stringapprox.productions_from_dfg(nodes, edges, hotspots)
     pats = stringapprox.grammar_patterns(prods)
-    probes = _const_df(
-        spark, "dfg_probes", [(p,) for p in _DFG_PROBES], "probe string"
-    )
+    probes = local_frame(spark, [(p,) for p in _DFG_PROBES], "probe string")
     return pats.crossJoin(F.broadcast(probes)).select(
         "hotspot_id",
         "probe",
@@ -2482,9 +2458,7 @@ def q_sa_ops_grammar(spark, sf_dir):
     hotspots = nation.select(hid.alias("hotspot_id"), (base + 6).alias("node_id"))
     prods = stringapprox.productions_from_dfg(nodes, edges, hotspots)
     pats = stringapprox.grammar_patterns(prods)
-    probes = _const_df(
-        spark, "ops_probes", [(p,) for p in _OPS_PROBES], "probe string"
-    )
+    probes = local_frame(spark, [(p,) for p in _OPS_PROBES], "probe string")
     return pats.crossJoin(F.broadcast(probes)).select(
         "hotspot_id",
         "probe",
@@ -2542,9 +2516,7 @@ def q_sa_charset_cycle(spark, sf_dir):
         ).alias("p"),
     ).select("hotspot_id", "p.*")
     pats = stringapprox.grammar_patterns(prods)
-    probes = _const_df(
-        spark, "cset_probes", [(p,) for p in _CSET_PROBES], "probe string"
-    )
+    probes = local_frame(spark, [(p,) for p in _CSET_PROBES], "probe string")
     return pats.crossJoin(F.broadcast(probes)).select(
         "hotspot_id",
         "charset_regex",

@@ -3,11 +3,40 @@
 The reference's mutable JVM object graph (Node.kt class hierarchy +
 PropertyEdge, see SURVEY.md §1.1) becomes a small set of columnar tables.
 Sparse per-kind fields go into a map column instead of 70 subclasses.
+Driver-built tables (fixtures, probe lists, alias dictionaries, driver
+CC/SCC results) become frames through `local_frame`.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """Python rows as a frame: the one way the package turns rows built
+    on the driver into a DataFrame. `schema` is a DDL string or a
+    StructType. The rows go through a pyarrow table, so the plan leaf is
+    a LocalRelation (LocalTableScan) and reading the frame starts no
+    Python worker, where `createDataFrame` of a row list parallelizes
+    pickled rows through one. A build costs ~0.02 s, so nothing caches
+    the frames."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
 
 # ---------------------------------------------------------------------------
 # Input: Common-Crawl-style pages (BASELINE.json input_hint — fixed schema)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import synth
-from ..schema import ALIAS_DICT, PAGES
+from ..schema import PAGES
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
@@ -26,11 +26,6 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
 def synth_pages(spark: SparkSession, n_pages: int, seed: int = 42) -> DataFrame:
     corpus = synth.make_corpus(n_pages, seed)
     return spark.createDataFrame(corpus["pages"], PAGES)
-
-
-def synth_alias_dict(spark: SparkSession) -> DataFrame:
-    rows = synth.alias_dict_rows(synth.build_world())
-    return spark.createDataFrame(rows, ALIAS_DICT)
 
 
 # template pieces shared with synth.page_html — kept in one place so the

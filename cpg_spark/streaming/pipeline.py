@@ -1,24 +1,20 @@
 """Structured-Streaming variant of the KG pipeline for incremental
 crawls: new page files land in a directory (the Iceberg-append analog),
-the stream extracts mentions, links them against the broadcast
-dictionary, and maintains watermarked windowed triple counts.
+and each micro-batch runs the batch chain and merges its triple
+aggregate into a persistent graph snapshot.
 
 The reference is batch-only (SURVEY.md §2.8); this module is the
 incremental-ingest extension a production crawl pipeline needs. The
-stateless stages reuse the BATCH Column expressions verbatim —
-Structured Streaming executes the same declarative plan incrementally,
-which is the payoff of never writing RDD/per-row code in the batch path.
+stages reuse the BATCH operators verbatim — Structured Streaming
+executes the same declarative plan per micro-batch, which is the payoff
+of never writing RDD/per-row code in the batch path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.text import extract_text_col, sentences_col
-from ..operators import link
 from ..schema import PAGES
-from ..synth import MENTION_REGEX, TARGET_LANGS
 
 
 def read_page_stream(
@@ -30,109 +26,11 @@ def read_page_stream(
     return reader.parquet(pages_dir)
 
 
-def windowed_entity_mentions(
-    pages_stream: DataFrame,
-    alias_dict: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    target_langs: tuple[str, ...] = TARGET_LANGS,
-) -> DataFrame:
-    """Watermarked tumbling-window mention counts per entity — the
-    streaming rollup of the batch `mentions` triples. Late pages beyond
-    the watermark are dropped (bounded state); in append mode a window
-    emits exactly once, when the watermark passes its end."""
-    txt = pages_stream.filter(F.col("lang").isin(list(target_langs))).select(
-        "url", "warc_ts", extract_text_col(F.col("html")).alias("text")
-    )
-    sents = txt.select(
-        "url",
-        "warc_ts",
-        F.posexplode(sentences_col(F.col("text"))).alias("sent_idx", "sentence"),
-    )
-    ments = sents.select(
-        "url",
-        "warc_ts",
-        F.explode(
-            F.transform(
-                F.regexp_extract_all(F.col("sentence"), F.lit(MENTION_REGEX), 0),
-                F.lower,
-            )
-        ).alias("alias_norm"),
-    )
-    best = link.best_alias_dict(alias_dict)
-    linked = ments.join(
-        F.broadcast(best), ments["alias_norm"] == best["alias"], "inner"
-    )
-    return (
-        linked.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("entity_id"))
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .select(F.col("w.start").alias("window_start"), "entity_id", "n_mentions")
-    )
-
-
-def run_available_now(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    query_name: str = "kg_stream",
-    output_mode: str = "append",
-    sink_path: str | None = None,
-):
-    """Drain everything currently available and stop (Trigger.AvailableNow)
-    — incremental, exactly-once batches over a growing directory. The
-    checkpoint directory plays the snapshot role of the batch catalog:
-    a rerun processes only files added since the last drain.
-
-    sink_path=None writes to an in-memory table named `query_name`
-    (inspection; no checkpoint recovery); a path writes parquet, the
-    resumable production shape."""
-    w = stream_df.writeStream.outputMode(output_mode).option(
-        "checkpointLocation", checkpoint_dir
-    ).trigger(availableNow=True).queryName(query_name)
-    if sink_path is None:
-        return w.format("memory").start()
-    return w.format("parquet").option("path", sink_path).start()
-
-
-def dedup_page_stream(
-    pages_stream: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming exact dedup for incremental crawls: re-crawled pages
-    whose NORMALIZED TEXT CONTENT is identical to one already seen
-    within the watermark are dropped (dropDuplicatesWithinWatermark —
-    state per key expires with the watermark, so memory is bounded by
-    the crawl window, not the crawl history).
-
-    The dedup KEY is the normalized text itself — exactly what batch
-    `dedup.exact_dup_map` partitions on, so batch and streaming agree
-    on what counts as a duplicate. Deliberately NOT the 30-bit
-    polynomial fingerprint alone: in a 10^9-space the birthday bound
-    reaches ~50% collision odds around 37k distinct pages per window,
-    and a collision would silently drop a distinct document. The
-    polynomial fp is still emitted as a column for observability /
-    downstream grouping; a state-size-constrained deployment can swap
-    the key for a 256-bit digest at negligible collision risk."""
-    from ..functions.hashing import char_poly_hash_col
-
-    norm = F.regexp_replace(
-        F.lower(F.trim(extract_text_col(F.col("html")))), r"\s+", " "
-    )
-    keyed = pages_stream.withColumn("__norm", norm).withColumn(
-        "fp", char_poly_hash_col(F.col("__norm"))
-    )
-    return (
-        keyed.withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["__norm"])
-        .drop("__norm")
-    )
-
-
 class SnapshotMergeSink:
-    """The exactly-once snapshot-commit protocol every foreachBatch
-    sink here shares (factored in r6 from ingest_graph_stream so the
-    telemetry stream below does not re-implement it): each commit
-    writes the merged frame to out_dir/v{batch_id} and atomically
-    renames a pointer recording {batch_id, path, checkpoint_dir}.
+    """The exactly-once snapshot-commit protocol of the foreachBatch
+    ingest sink (ingest_graph_stream): each commit writes the merged
+    frame to out_dir/v{batch_id} and atomically renames a pointer
+    recording {batch_id, path, checkpoint_dir}.
 
     guard(batch_id) returns the committed pointer dict (or None for a
     fresh dir), returns the string "skip" for a crash-replay of the
@@ -274,7 +172,7 @@ def ingest_graph_stream(
     (file-sourced micro-batches are whole files), so co-occurrence
     evidence is batch-local and the merge's sum rule is exact.
     Returns the started StreamingQuery (AvailableNow trigger)."""
-    from ..operators import canonicalize, extract, link as _link, materialize
+    from ..operators import canonicalize, extract, link, materialize
 
     comps = canonicalize.canonical_map(alias_dict)
     sink = SnapshotMergeSink(graph_dir, checkpoint_dir, retain_snapshots)
@@ -285,7 +183,7 @@ def ingest_graph_stream(
             return  # crash-replay of the committed batch — never double-merge
         sent = extract.sentences(batch_df)
         ment = extract.mentions(sent)
-        links = _link.link_mentions(ment, alias_dict)
+        links = link.link_mentions(ment, alias_dict)
         clinks = materialize.canonical_links(links, comps)
         agg = materialize.triples_agg(
             materialize.triples_from_links(clinks, comps)
@@ -312,92 +210,3 @@ def read_current_graph(spark: SparkSession, graph_dir: str) -> DataFrame:
 
     with open(_os.path.join(graph_dir, "CURRENT")) as f:
         return spark.read.parquet(_json.load(f)["path"])
-
-
-def telemetry_stream(
-    spark: SparkSession,
-    pages_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    hll_p: int = 12,
-    query_name: str = "kg_telemetry",
-    max_files_per_trigger: int | None = None,
-    retain_snapshots: int = 2,
-):
-    """Streaming corpus telemetry: per micro-batch, the pages' distinct
-    (url, token) postings update a persistent HyperLogLog register
-    snapshot (operators/sketches.py) under the same exactly-once
-    snapshot-commit protocol as the graph ingest (SnapshotMergeSink).
-    Because HLL registers merge by per-register MAX — the
-    pytest-proven append-only property — the streamed snapshot is
-    bit-identical to the batch-at-once registers over the same pages
-    (golden-tested), and a crash-replayed batch merges idempotently
-    (max(a, a) = a, so even a re-merge would be harmless; the guard
-    skips it anyway). The register table is bounded at 2^p rows
-    regardless of how many pages ever stream through — telemetry state
-    that never grows. Read the current estimate with
-    read_current_telemetry()."""
-    from ..functions.hashing import char_poly_hash_col
-    from ..operators import sketches
-    from ..operators.textstats import doc_tokens
-
-    sink = SnapshotMergeSink(stats_dir, checkpoint_dir, retain_snapshots)
-
-    def _registers(batch_df: DataFrame) -> DataFrame:
-        toks = batch_df.select(
-            "url",
-            F.explode(
-                doc_tokens(extract_text_col(F.col("html")))
-            ).alias("tok"),
-        )
-        postings = toks.select(
-            F.lit("corpus").alias("scope"),
-            F.concat(
-                (char_poly_hash_col(F.col("url")) % F.lit(1 << 30)).cast(
-                    "string"
-                ),
-                F.lit("|"),
-                F.col("tok"),
-            ).alias("posting"),
-        )
-        return sketches.hll_registers(
-            postings, F.col("posting"), ["scope"], p=hll_p
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        cur = sink.guard(batch_id)
-        if cur == "skip":
-            return
-        regs = _registers(batch_df)
-        if cur is not None:
-            existing = batch_df.sparkSession.read.parquet(cur["path"])
-            regs = (
-                existing.unionByName(regs)
-                .groupBy("scope", "reg")
-                .agg(F.max("rho").alias("rho"))
-            )
-        sink.commit(regs, batch_id)
-
-    stream = read_page_stream(spark, pages_dir, max_files_per_trigger)
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
-
-
-def read_current_telemetry(
-    spark: SparkSession, stats_dir: str, hll_p: int = 12
-) -> DataFrame:
-    """(scope, n_zero_registers, est_distinct) from the telemetry
-    stream's last committed register snapshot."""
-    import json as _json
-    import os as _os
-
-    from ..operators import sketches
-
-    with open(_os.path.join(stats_dir, "CURRENT")) as f:
-        regs = spark.read.parquet(_json.load(f)["path"])
-    return sketches.hll_estimate(regs, ["scope"], p=hll_p)

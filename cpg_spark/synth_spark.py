@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .schema import local_frame
 from .synth import FILLER, OOV_NAMES, TARGET_LANGS, build_world
 
 # lang wheel: each target lang twice + one non-target (skip-path coverage)
@@ -108,8 +109,10 @@ def alias_dict_df(spark: SparkSession) -> DataFrame:
     table, still broadcast-sized)."""
     from .synth import alias_dict_rows
 
-    rows = alias_dict_rows(build_world())
-    return spark.createDataFrame(
+    cols = ("alias", "entity_id", "entity_name", "entity_type", "prior")
+    rows = [tuple(r[c] for c in cols) for r in alias_dict_rows(build_world())]
+    return local_frame(
+        spark,
         rows,
         "alias string, entity_id string, entity_name string, "
         "entity_type string, prior double",

@@ -149,70 +149,6 @@ def test_extracted_text_dispatches_per_row(spark):
     assert got["u3"] == "just plain bytes."
 
 
-def test_branched_eog_from_corpus(spark, pages_df):
-    """Branched EOG emitted from REAL extracted pages (not planted key
-    graphs): interrogative sentences branch, the folded condition kills
-    the contradicting edge, and BFS skips dead chunks — verified against
-    an independent pure-python golden walk over the same sentences."""
-    from cpg_spark.functions.text import split_sentences_py
-    from cpg_spark.operators import canonicalize
-    from cpg_spark.operators.extract import (
-        extracted_text,
-        flag_unreachable_edges,
-        sentence_order_edges_branched,
-        sentences,
-    )
-    from cpg_spark.synth import TARGET_LANGS
-
-    sent = sentences(pages_df)
-    edges = flag_unreachable_edges(sentence_order_edges_branched(sent))
-    # composite node ids for the global BFS
-    e = edges.select(
-        F.concat_ws("#", "url", F.col("src_idx").cast("string")).alias("src"),
-        F.concat_ws("#", "url", F.col("dst_idx").cast("string")).alias("dst"),
-        "unreachable",
-    )
-    seeds = sent.filter(F.col("sent_idx") == 0).select(
-        F.concat_ws("#", "url", F.col("sent_idx").cast("string")).alias("node")
-    )
-    got = {
-        (r["node"], r["hops"])
-        for r in canonicalize.bfs_reach(e, seeds, src="src", dst="dst").collect()
-    }
-
-    # independent golden: pure-python walk
-    exp = set()
-    for row in extracted_text(pages_df).collect():
-        if row["lang"] not in TARGET_LANGS:
-            continue
-        sents = split_sentences_py(row["text"])
-        if not sents:
-            continue
-        frontier, hops, seen = {0}, 0, {}
-        while frontier:
-            for i in frontier:
-                seen.setdefault(i, hops)
-            nxt = set()
-            for i in frontier:
-                if sents[i].endswith("?"):
-                    cond = len(sents[i]) % 2 == 0
-                    tgt = i + 1 if cond else i + 2
-                    if tgt < len(sents) and tgt not in seen:
-                        nxt.add(tgt)
-                else:
-                    if i + 1 < len(sents) and i + 1 not in seen:
-                        nxt.add(i + 1)
-            frontier = nxt
-            hops += 1
-        for i, h in seen.items():
-            exp.add((f"{row['url']}#{i}", h))
-    assert got == exp
-    # the corpus genuinely exercises both branch kinds
-    n_guard = edges.filter(F.col("branch").isNotNull()).count()
-    n_dead = edges.filter(F.col("unreachable")).count()
-    assert n_guard > 0 and n_dead > 0
-
-
 def test_jsonld_triples_edge_cases(spark):
     """Structured-data frontend contract: malformed blocks skip
     (don't fail), nested values keep their raw JSON text, a block with

@@ -1,5 +1,6 @@
-"""Structured-Streaming tests: watermarked windowed rollup + incremental
-(AvailableNow) resume over a growing pages directory."""
+"""Structured-Streaming tests: streaming KG ingest merged into a graph
+snapshot (foreachBatch), golden against the batch chain, and the
+snapshot sink's replay and retention contract."""
 
 from __future__ import annotations
 
@@ -7,115 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from cpg_spark.streaming import pipeline as sp
-
-
-@pytest.fixture()
-def pages_dir(tmp_path, spark, pages_df):
-    """Write the golden corpus as the first file batch; timestamps in the
-    corpus span seconds, so shift them to span hours for windowing."""
-    spread = pages_df.withColumn(
-        "warc_ts",
-        F.col("warc_ts")
-        + F.make_interval(hours=F.pmod(F.xxhash64("url"), F.lit(6)).cast("int")),
-    )
-    d = str(tmp_path / "pages")
-    spread.coalesce(1).write.mode("overwrite").parquet(d)
-    return d
-
-
-def _drain(spark, stream, ckpt, name):
-    q = sp.run_available_now(stream, ckpt, query_name=name)
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def test_windowed_rollup_matches_batch(spark, pages_dir, alias_df, tmp_path):
-    stream = sp.read_page_stream(spark, pages_dir)
-    agg = sp.windowed_entity_mentions(stream, alias_df, watermark="1 hour")
-    got = _drain(spark, agg, str(tmp_path / "ck1"), "roll1")
-
-    # batch reference: the SAME declarative pipeline executed as a batch
-    # (withWatermark is a no-op on batch input)
-    batch = spark.read.parquet(pages_dir)
-    expected = sp.windowed_entity_mentions(batch, alias_df, watermark="1 hour")
-    exp_rows = {
-        (r["window_start"], r["entity_id"]): r["n_mentions"]
-        for r in expected.collect()
-    }
-    got_rows = {
-        (r["window_start"], r["entity_id"]): r["n_mentions"] for r in got.collect()
-    }
-    # append mode emits only watermark-closed windows: subset with equal counts
-    assert got_rows, "stream emitted nothing — watermark never advanced"
-    for k, v in got_rows.items():
-        assert exp_rows[k] == v
-    # the open tail (last watermark span) is allowed to be missing
-    missing = set(exp_rows) - set(got_rows)
-    if missing:
-        max_start = max(ws for ws, _ in exp_rows)
-        assert all(ws >= max_start - __import__("datetime").timedelta(hours=2) for ws, _ in missing)
-
-
-def test_available_now_resume_processes_only_new_files(
-    spark, pages_dir, alias_df, tmp_path, pages_df
-):
-    ckpt = str(tmp_path / "ck2")
-    sink = str(tmp_path / "sink")
-
-    stream = sp.read_page_stream(spark, pages_dir)
-    agg = sp.windowed_entity_mentions(stream, alias_df, watermark="1 hour")
-    q1 = sp.run_available_now(agg, ckpt, query_name="roll2a", sink_path=sink)
-    q1.awaitTermination(120)
-    first = spark.read.parquet(sink).collect()
-
-    # append a second batch of files 12 hours later -> watermark advances,
-    # previously-open windows close and emit
-    later = pages_df.withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 12 HOURS"))
-    later.coalesce(1).write.mode("append").parquet(pages_dir)
-
-    stream2 = sp.read_page_stream(spark, pages_dir)
-    agg2 = sp.windowed_entity_mentions(stream2, alias_df, watermark="1 hour")
-    q2 = sp.run_available_now(agg2, ckpt, query_name="roll2b", sink_path=sink)
-    q2.awaitTermination(120)
-    both = spark.read.parquet(sink).collect()
-
-    # the resumed drain appended newly-closed windows without re-emitting
-    assert len(both) > len(first)
-    key = lambda r: (r["window_start"], r["entity_id"])  # noqa: E731
-    assert len({key(r) for r in both}) == len(both), "window re-emitted on resume"
-
-
-def test_dedup_page_stream_drops_recrawls(spark, tmp_path, pages_df):
-    """Identical re-crawled content within the watermark is dropped;
-    distinct pages all survive."""
-    from pyspark.sql import functions as F
-
-    from cpg_spark.streaming.pipeline import (
-        dedup_page_stream,
-        read_page_stream,
-        run_available_now,
-    )
-
-    d = str(tmp_path / "pages_dd")
-    base = pages_df.limit(10)
-    # re-crawl: same html under different urls, later timestamps
-    recrawl = base.select(
-        F.concat(F.col("url"), F.lit("?recrawl")).alias("url"),
-        (F.col("warc_ts") + F.expr("INTERVAL 10 MINUTES")).alias("warc_ts"),
-        "html",
-        "text",
-        "lang",
-    )
-    base.unionByName(recrawl).coalesce(1).write.mode("overwrite").parquet(d)
-
-    stream = dedup_page_stream(read_page_stream(spark, d))
-    q = run_available_now(stream, str(tmp_path / "ckdd"), "dd_stream")
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM dd_stream").collect()
-    # exactly one survivor per distinct content fingerprint
-    n_distinct = base.count()
-    assert len(out) == n_distinct
-    assert len({r["fp"] for r in out}) == n_distinct
 
 
 def test_ingest_graph_stream_matches_batch(spark, tmp_path, pages_df, alias_df):
@@ -247,69 +139,3 @@ def test_ingest_snapshot_retention(spark, tmp_path, pages_df, alias_df):
     assert vdirs == [os.path.basename(cur["path"])]
     # the retained snapshot is the readable current graph
     assert sp.read_current_graph(spark, gdir).count() > 0
-
-
-def test_telemetry_stream_matches_batch(spark, tmp_path, pages_df):
-    """Streaming HLL telemetry golden: pages arrive as two file
-    micro-batches whose register updates merge by per-register max —
-    the final snapshot is bit-identical to the batch-at-once registers
-    over the same pages, the estimate follows, and a second
-    AvailableNow run over the same checkpoint leaves the snapshot
-    untouched."""
-    from cpg_spark.functions.hashing import char_poly_hash_col
-    from cpg_spark.operators import sketches
-    from cpg_spark.operators.textstats import doc_tokens
-    from cpg_spark.streaming.pipeline import extract_text_col
-
-    d = str(tmp_path / "pages_tel")
-    pages_df.filter(F.xxhash64("url") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    pages_df.filter(F.xxhash64("url") % 2 != 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-
-    sdir = str(tmp_path / "stats_tel")
-    q = sp.telemetry_stream(
-        spark, d, sdir, str(tmp_path / "ck_tel"), max_files_per_trigger=1
-    )
-    q.awaitTermination(180)
-
-    import json
-    import os
-
-    with open(os.path.join(sdir, "CURRENT")) as f:
-        cur = json.load(f)
-    assert cur["batch_id"] >= 1  # really ran as >1 micro-batch
-    streamed = spark.read.parquet(cur["path"])
-
-    postings = pages_df.select(
-        "url", F.explode(doc_tokens(extract_text_col(F.col("html")))).alias("tok")
-    ).select(
-        F.lit("corpus").alias("scope"),
-        F.concat(
-            (char_poly_hash_col(F.col("url")) % F.lit(1 << 30)).cast("string"),
-            F.lit("|"),
-            F.col("tok"),
-        ).alias("posting"),
-    )
-    batch = sketches.hll_registers(postings, F.col("posting"), ["scope"])
-
-    key = lambda r: (r["scope"], r["reg"], r["rho"])  # noqa: E731
-    assert sorted(map(key, streamed.collect())) == sorted(
-        map(key, batch.collect())
-    )
-    est = sp.read_current_telemetry(spark, sdir).collect()[0]
-    assert est["est_distinct"] > 0
-
-    # idempotent replay: nothing new to read -> snapshot untouched
-    before = sorted(map(key, streamed.collect()))
-    q2 = sp.telemetry_stream(
-        spark, d, sdir, str(tmp_path / "ck_tel"),
-        max_files_per_trigger=1, query_name="kg_telemetry2",
-    )
-    q2.awaitTermination(120)
-    with open(os.path.join(sdir, "CURRENT")) as f:
-        cur2 = json.load(f)
-    after = sorted(map(key, spark.read.parquet(cur2["path"]).collect()))
-    assert after == before

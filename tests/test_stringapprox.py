@@ -8,7 +8,7 @@ import re
 
 import pytest
 
-from cpg_spark.operators import canonicalize, extract, stringapprox
+from cpg_spark.operators import canonicalize, stringapprox
 
 
 def test_charset_approx_accepts_all_members():
@@ -67,14 +67,6 @@ def test_entity_surface_patterns_end_to_end(spark, alias_df):
             for w in words:
                 if w not in others:
                     assert not rx.fullmatch(w), (comp, other, w)
-
-
-def test_eog_pandas_twin_equals_window(spark, pages_df):
-    sent = extract.sentences(pages_df)
-    a = {tuple(r) for r in extract.sentence_order_edges(sent).collect()}
-    b = {tuple(r) for r in extract.sentence_order_edges_pandas(sent).collect()}
-    assert a == b
-    assert len(a) > 0
 
 
 # --- regular approximation (Mohri-Nederhof) ----------------------------------
