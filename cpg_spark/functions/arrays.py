@@ -1,4 +1,5 @@
-"""Array kernels shared by the materialize stage and the query layer.
+"""Array kernels shared by the materialize stage, the operators and the
+query layer.
 
 The co-occurrence pair emission is the reference's per-sentence edge
 emission (DFGPass.kt:43-91 emits edges per node pair) done JVM-side from
@@ -35,4 +36,20 @@ def chunk_array(arr: Column, size: int) -> Column:
     return F.transform(
         F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0))),
         lambda i: F.slice(arr, i * size + 1, size),
+    )
+
+
+def ordered_sum(key: str, val: str) -> Column:
+    """Aggregate: the double sum of column `val` as a sequential left
+    fold from 0.0 over the group's rows sorted by (`key`, `val`). The
+    order of the additions is a function of the data alone, so the sum
+    is bit-identical at any parallelism and DuckDB replays it as
+    `list_reduce(list_prepend(0.0, list(val ORDER BY key)), +)`."""
+    return F.aggregate(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(key, val))),
+            lambda s: s.getField(val),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )

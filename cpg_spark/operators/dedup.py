@@ -28,6 +28,7 @@ from ..functions.hashing import (
     poly_append_char,
     poly_append_token,
 )
+from .iterutil import ckpt
 from .textstats import doc_tokens, has_min_tokens
 
 # MinHash family: h_k(x) = ((2k+1)*x + 1000003*k) mod P — odd multiplier,
@@ -255,15 +256,13 @@ def jaccard_pairs(
     default None keeps exact semantics (oracle parity); with a cap the
     jaccard becomes an under-estimate over the rare-shingle subspace —
     doc sizes are still counted post-filter so the ratio stays in [0,1]."""
-    from .iterutil import ckpt as _ckpt
-
     # the inverted index feeds the df-cap plus THREE consumers (sizes +
     # both self-join sides) — materialize it once (the index table a
     # full-scale run would snapshot) instead of re-running the shingle
     # kernel per consumer
-    idx = _ckpt(shingle_index(docs, n))
+    idx = ckpt(shingle_index(docs, n))
     if max_doc_freq is not None:
-        idx = _ckpt(_df_capped(idx, max_doc_freq))
+        idx = ckpt(_df_capped(idx, max_doc_freq))
     sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     left = idx.alias("l")
     right = idx.alias("r")
@@ -328,10 +327,8 @@ def jaccard_for_pairs(
             ).alias("sh"),
         )
     else:
-        from .iterutil import ckpt as _ckpt_idx
-
         idx = _df_capped(
-            _ckpt_idx(shingle_index(docs, n).drop("lang")), max_doc_freq
+            ckpt(shingle_index(docs, n).drop("lang")), max_doc_freq
         )
         idx_c = idx.join(cand_ids, "doc_id", "left_semi")
     # r7 shape: intersection sizes via the candidate-CONFINED inverted
@@ -344,9 +341,7 @@ def jaccard_for_pairs(
     # sides); materialize it once (lineage-truncating checkpoint — the
     # in-session analog of the index table a 100 TB run would snapshot)
     # instead of re-running the kernel per consumer.
-    from .iterutil import ckpt as _ckpt
-
-    idx_c = _ckpt(idx_c)
+    idx_c = ckpt(idx_c)
     sizes = idx_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a_sh = pairs.join(idx_c.withColumnRenamed("doc_id", "a"), "a")
     n_common = (
@@ -666,9 +661,7 @@ def anchor_chunk_dedup(
     # narrow (doc_id, fam, start, end, fp) rows; materialize once — the
     # agg and the join-back below would otherwise each re-run the span
     # kernel (same contract as jaccard_for_pairs' confined index)
-    from .iterutil import ckpt as _ckpt
-
-    chunks = _ckpt(chunks)
+    chunks = ckpt(chunks)
 
     # combinable count + min(struct) + equi-join back on (fam, fp) — the
     # r6-verdict retrofit, replacing the (fam, fp) rank window; only

@@ -1,11 +1,18 @@
-"""Graph centrality over the materialized entity graph: weighted
-PageRank as a fixed-iteration DataFrame loop.
+"""Graph algorithms over the materialized entity graph: centrality
+(PageRank, HITS), communities (label propagation), triangles, link
+prediction and k-core peeling.
 
 The reference stops at graph construction and hands analytics to Neo4j
 (cpg Application.kt pushes the graph; centrality would run as a Cypher /
 GDS call). A Spark-native KG pipeline wants the first-class ranking
 in-engine — it drives entity canonical-name election, crawl
 prioritization, and triple-confidence weighting downstream.
+
+The four iterative operators (pagerank, hits, label_propagation, kcore)
+are bounded `iterutil.fixpoint` loops: their static edge/node frames
+are checkpointed once before the loop, each round checkpoints its state
+and releases the one it replaced, and the caller's release boundary
+frees the statics (iterutil module docstring).
 
 Determinism contract (the repo's oracle rule): ranks are IEEE doubles,
 so every cross-row sum is a SEQUENTIAL fold over a sort-keyed collected
@@ -18,24 +25,12 @@ exchange — the standard trade, documented here rather than silent.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.arrays import ordered_sum
 from ..functions.hashing import char_poly_hash_col
-from .iterutil import ckpt
-
-
-def _ordered_sum(key: str, val: str) -> Column:
-    """Sequential left fold of `val` over rows sorted by `key` — the
-    engine-parity float sum (see module docstring)."""
-    return F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(key, F.col(val)))),
-            lambda s: s.getField(val),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from .iterutil import ckpt, counted, fixpoint
 
 
 def salted_ordered_sum(
@@ -57,17 +52,17 @@ def salted_ordered_sum(
     raise n_salts with the expected hub size).
 
     n_salts=1 degenerates to the single flat fold (bit-equal to
-    _ordered_sum — the r5 contract; the pytest asserts it)."""
+    ordered_sum — the r5 contract; the pytest asserts it)."""
     if n_salts <= 1:
-        return df.groupBy(*group_cols).agg(_ordered_sum(key, val).alias(out))
+        return df.groupBy(*group_cols).agg(ordered_sum(key, val).alias(out))
     salted = df.withColumn(
         "__psalt",
         (char_poly_hash_col(F.col(key).cast("string")) % n_salts).cast("int"),
     )
     p1 = salted.groupBy(*group_cols, "__psalt").agg(
-        _ordered_sum(key, val).alias("__pp")
+        ordered_sum(key, val).alias("__pp")
     )
-    return p1.groupBy(*group_cols).agg(_ordered_sum("__psalt", "__pp").alias(out))
+    return p1.groupBy(*group_cols).agg(ordered_sum("__psalt", "__pp").alias(out))
 
 
 def pagerank(
@@ -94,8 +89,9 @@ def pagerank(
     src (both sides hash-partitioned on src — the exchange is reused
     across iterations since the edge side is static), one aggregation
     keyed by dst, one driver-free recombine; the dangling term is a
-    1-row aggregate broadcast in. N is a single count() — the one
-    driver scalar, needed for the teleport literal. With
+    1-row aggregate broadcast in. N is the one driver scalar, needed
+    for the teleport literal; it is read from the node frame's
+    checkpoint job. With
     ordered=False the per-dst aggregation is a plain combinable sum
     (use at web scale); ordered=True is the oracle-parity fold,
     SALTED two-phase since r6 (salted_ordered_sum, `ordered_salts`
@@ -106,51 +102,37 @@ def pagerank(
     bit-exactly — pytest-asserted). The dangling-mass fold is salted
     the same way.
 
-    The edge and node frames are cached once: every iteration re-reads
-    them, and without the cache a deep edge lineage (e.g. edges derived
-    from a full extract->cooccur plan) re-executes per iteration — the EdgeCachePass analog. On a real
-    cluster this stage is a materialized snapshot instead. Caching does
-    not change values, only lineage.
+    The edge and node frames are checkpointed before the loop: every
+    iteration re-reads them, and a deep edge lineage (e.g. edges derived
+    from a full extract->cooccur plan) must not re-execute per iteration
+    — the EdgeCachePass analog. The iterations run on iterutil.fixpoint:
+    each ranks frame is checkpointed (the update reads ranks TWICE —
+    contributions + dangling mass — so without truncation the plan
+    doubles per iteration) and the one it supersedes is released.
 
-    Each iteration's ranks frame is lineage-truncated (the repo-wide
-    iterutil contract: localCheckpoint, or a reliable checkpoint when
-    the context has a checkpoint directory) — the update reads ranks TWICE
-    (contributions + dangling mass), so without truncation the plan
-    doubles per iteration. The superseded iterations' checkpoints stay
-    persisted until the caller's release boundary (iterutil.release);
-    the returned frame reads only the last one.
-
-    Returns (node, rank)."""
+    Returns (node, rank); no rows for an empty edge set."""
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
     )
-    nodes = (
-        e.select(F.col("__s").alias("node"))
-        .unionByName(e.select(F.col("__d").alias("node")))
-        .distinct()
-    )
     out_w = e.groupBy("__s").agg(F.sum("__w").alias("__ow"))
-    e = e.join(out_w, "__s")
-    # r7: the dangling-node SET is static — flag it once on the node
-    # frame instead of re-running a ranks ⟕̸ out_w anti-join every
-    # iteration (the flagged rows feed the identical fold, so values
-    # are bit-equal in both ordered modes)
-    nodes = nodes.join(
-        out_w.withColumnRenamed("__s", "node").withColumn(
-            "__has_out", F.lit(True)
-        ).select("node", "__has_out"),
-        "node",
-        "left",
-    ).select("node", F.col("__has_out").isNull().alias("__dang"))
-    e = e.cache()
-    nodes = nodes.cache()
-    n = nodes.count()
-    teleport = (F.lit(1.0) - F.lit(damping)) / F.lit(n)
-    ranks = ckpt(
-        nodes.select("node", "__dang", (F.lit(1.0) / F.lit(n)).alias("rank"))
+    e = ckpt(e.join(out_w, "__s"))
+    # the dangling-node SET is static: flag it once on the node frame —
+    # a node is dangling when none of its appearances is as a source
+    nodes, n = counted(
+        e.select(F.col("__s").alias("node"), F.lit(False).alias("__dang"))
+        .unionByName(
+            e.select(F.col("__d").alias("node"), F.lit(True).alias("__dang"))
+        )
+        .groupBy("node")
+        .agg(F.bool_and("__dang").alias("__dang"))
     )
-    for _ in range(n_iter):
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("rank"))
+    teleport = (F.lit(1.0) - F.lit(damping)) / F.lit(n)
+
+    def step(state, _):
+        (ranks,) = state
         contribs = e.join(
             ranks.select(F.col("node").alias("__s"), "rank"), "__s"
         ).select(
@@ -171,7 +153,7 @@ def pagerank(
             dangling = dang_ranks.agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
             )
-        ranks = ckpt(
+        return (
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -187,11 +169,13 @@ def pagerank(
                 ).alias("rank"),
             ),
         )
-    # the returned ranks frame is already checkpointed and no longer
-    # depends on the statics — release them so repeated calls in a
-    # long-lived session don't leak cached partitions
-    for df in (e, nodes):
-        df.unpersist()
+
+    (ranks,) = fixpoint(
+        step,
+        (nodes.select("node", "__dang", (F.lit(1.0) / F.lit(n)).alias("rank")),),
+        max_iter=n_iter,
+        what="pagerank",
+    )
     return ranks.select("node", "rank")
 
 
@@ -220,24 +204,31 @@ def hits(
     F.sum in (the web-scale mode). Zero-norm sides (no edges) emit
     all-zero scores rather than NaN.
 
-    Scale shape per iteration: two src/dst-keyed join+agg rounds over
-    the static cached edge frame plus two 1-row norm scalars broadcast
-    back — no driver collection; each unnormalized frame is
-    lineage-truncated before the norm divides it (it is read twice:
-    squares and quotient), the iterutil contract.
+    Scale shape: the edge and node frames are checkpointed before the
+    loop; the state is one (node, authority, hub) frame, and each
+    half-step is one iterutil.fixpoint round — odd rounds recompute the
+    authorities from the hubs, even rounds the hubs from the
+    authorities: a src/dst-keyed join+agg over the static edges plus a
+    1-row norm scalar broadcast back, no driver collection, one
+    checkpoint per half-step.
 
-    Returns (node, authority, hub) for every node of either side."""
+    Returns (node, authority, hub) for every node of either side; no
+    rows for an empty edge set."""
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
-    e = edges.select(
-        F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
+    e = ckpt(
+        edges.select(
+            F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
+        )
     )
-    nodes = (
+    nodes, n = counted(
         e.select(F.col("__s").alias("node"))
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
     )
-    e = e.cache()
-    nodes = nodes.cache()
+    if n == 0:
+        return nodes.select(
+            "node", F.lit(0.0).alias("authority"), F.lit(0.0).alias("hub")
+        )
 
     def _norm_scalar(scored: DataFrame, val: str) -> DataFrame:
         # sqrt of the deterministic sum of squares -> 1-row frame
@@ -250,12 +241,18 @@ def hits(
             s = sq.agg(F.coalesce(F.sum("__q"), F.lit(0.0)).alias("__ss"))
         return s.select(F.sqrt("__ss").alias("__norm"))
 
-    def _half_step(scores: DataFrame, in_key: str, out_key: str,
-                   score: str) -> DataFrame:
+    def half_step(state, i):
+        # odd rounds: authority(v) from the hubs of v's in-neighbors;
+        # even rounds: hub(u) from the authorities of u's out-neighbors
+        (scores,) = state
+        if i % 2:
+            in_key, out_key, score, new = "__s", "__d", "hub", "authority"
+        else:
+            in_key, out_key, score, new = "__d", "__s", "authority", "hub"
         # unnormalized out-side sum: score(u)*w over edges grouped by
         # the opposite endpoint; fold keyed by the contributing node
         contribs = e.join(
-            scores.withColumnRenamed("node", in_key), in_key
+            scores.select(F.col("node").alias(in_key), score), in_key
         ).select(
             F.col(out_key).alias("node"),
             F.col(in_key),
@@ -267,51 +264,30 @@ def hits(
             )
         else:
             summed = contribs.groupBy("node").agg(F.sum("__c").alias("__u"))
-        # summed is read twice (squared norm + quotient): a LAZY cache
-        # reuses its shuffle inside the one eager checkpoint job below
-        # (one materialization barrier per half-step, not two — halves
-        # the fixed per-iteration scheduling cost vs ckpt'ing both)
-        summed = summed.cache()
+        # summed is read twice (squared norm + quotient); the round's one
+        # checkpoint job reuses its exchange
         norm = _norm_scalar(summed, "__u")
-        out = ckpt(
-            nodes.join(summed, "node", "left")
+        return (
+            scores.join(summed, "node", "left")
             .crossJoin(F.broadcast(norm))
-            .select(
-                "node",
+            .withColumn(
+                new,
                 F.when(
                     F.col("__norm") > 0.0,
                     F.coalesce(F.col("__u"), F.lit(0.0)) / F.col("__norm"),
-                ).otherwise(F.lit(0.0)).alias("score"),
-            ),
+                ).otherwise(F.lit(0.0)),
+            )
+            .select("node", "authority", "hub"),
         )
-        summed.unpersist()
-        return out
 
-    n = nodes.count()
-    # init needs no checkpoint: one projection over the cached nodes
-    init = nodes.select(
-        "node", (F.lit(1.0) / F.sqrt(F.lit(float(n)))).alias("score")
+    init = F.lit(1.0) / F.sqrt(F.lit(float(n)))
+    (scores,) = fixpoint(
+        half_step,
+        (nodes.select("node", init.alias("authority"), init.alias("hub")),),
+        max_iter=2 * n_iter,
+        what="hits",
     )
-    hub = init
-    auth = init
-    for _ in range(n_iter):
-        auth = _half_step(hub, "__s", "__d", "score")
-        hub = _half_step(auth, "__d", "__s", "score")
-    out = (
-        nodes.join(
-            auth.withColumnRenamed("score", "authority"), "node", "left"
-        )
-        .join(hub.withColumnRenamed("score", "hub"), "node", "left")
-        .select(
-            "node",
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-        )
-    )
-    out = ckpt(out)
-    for df in (e, nodes):
-        df.unpersist()
-    return out
+    return scores
 
 
 def label_propagation(
@@ -341,12 +317,13 @@ def label_propagation(
     Pregel-style determinization.
 
     Scale shape per round: one src-keyed join of labels into the
-    static cached edge frame, one combinable (node, label) integer
-    aggregation, one combinable per-node argmax, one left join back
-    to nodes — all map-side-partial, no windows, no driver state;
-    labels lineage-truncate per round (iterutil). symmetric=True
-    unions the reversed edges first (co-occurrence graphs arrive
-    symmetric already — leave it off there).
+    static edge frame (checkpointed before the loop), one combinable
+    (node, label) integer aggregation, one combinable per-node argmax,
+    one left join back to the labels — all map-side-partial, no
+    windows, no driver state; each round is one iterutil.fixpoint
+    round. symmetric=True unions the reversed edges first
+    (co-occurrence graphs arrive symmetric already — leave it off
+    there).
 
     Returns (node, label); label is the community id."""
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
@@ -360,15 +337,15 @@ def label_propagation(
                 F.col("__d").alias("__s"), F.col("__s").alias("__d"), "__w"
             )
         )
+    e = ckpt(e)
     nodes = (
         e.select(F.col("__s").alias("node"))
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
     )
-    e = e.cache()
-    nodes = nodes.cache()
-    labels = nodes.select("node", F.col("node").alias("lbl"))
-    for _ in range(n_iter):
+
+    def step(state, _):
+        (labels,) = state
         nb = (
             e.join(labels.withColumnRenamed("node", "__s"), "__s")
             .groupBy(F.col("__d").alias("node"), "lbl")
@@ -379,15 +356,19 @@ def label_propagation(
                 "__b"
             )
         ).select("node", F.col("__b.lbl").alias("__new"))
-        labels = ckpt(
+        return (
             labels.join(best, "node", "left").select(
                 "node", F.coalesce("__new", "lbl").alias("lbl")
             ),
         )
-    labels = ckpt(labels.select("node", F.col("lbl").alias("label")))
-    for df in (e, nodes):
-        df.unpersist()
-    return labels
+
+    (labels,) = fixpoint(
+        step,
+        (nodes.select("node", F.col("node").alias("lbl")),),
+        max_iter=n_iter,
+        what="label_propagation",
+    )
+    return labels.select("node", F.col("lbl").alias("label"))
 
 
 def triangle_count(
@@ -587,9 +568,12 @@ def kcore(
     rounds bound the peel DEPTH, and the pytest asserts convergence on
     its fixtures while the survivors always over-approximate the true
     k-core (never under). Per round: one semi-join of the static
-    cached adjacency against the alive set per endpoint + one
-    combinable integer count — no windows, no driver state; the alive
-    frame lineage-truncates per round.
+    adjacency (checkpointed before the loop) against the alive set per
+    endpoint + one combinable integer count — no windows, no driver
+    state; the rounds are iterutil.fixpoint rounds over the degree
+    frame, which starts as every node at degree k (all alive). A round
+    that peels the graph empty ends the loop early: every later round
+    would be empty too.
 
     Returns (node, in_kcore, core_deg) for every node of the input
     graph — core_deg is the survivor's degree measured against the
@@ -597,8 +581,8 @@ def kcore(
     peel converges within n_rounds this equals the degree inside the
     final subgraph, otherwise it can exceed it — consistent with the
     over-approximating contract above; 0 for peeled nodes). Requires
-    n_rounds >= 1 (with 0 rounds there is no degree table to report
-    and the join below would crash on deg=None — r6 ADVICE finding)."""
+    n_rounds >= 1 (with 0 rounds there is no degree table to report —
+    r6 ADVICE finding)."""
     if n_rounds < 1:
         raise ValueError("kcore requires n_rounds >= 1")
     und = (
@@ -609,24 +593,33 @@ def kcore(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    adj = und.select(F.col("a").alias("w"), F.col("b").alias("x")).unionByName(
-        und.select(F.col("b").alias("w"), F.col("a").alias("x"))
+    adj = ckpt(
+        und.select(F.col("a").alias("w"), F.col("b").alias("x")).unionByName(
+            und.select(F.col("b").alias("w"), F.col("a").alias("x"))
+        )
     )
     nodes = adj.select(F.col("w").alias("node")).distinct()
-    adj = adj.cache()
-    nodes = nodes.cache()
-    alive = nodes
-    deg = None
-    for _ in range(n_rounds):
+
+    def peel(state, _):
+        (deg,) = state
+        alive = deg.filter(F.col("core_deg") >= k).select("node")
         both = adj.join(
             alive.withColumnRenamed("node", "w"), "w"
         ).join(alive.withColumnRenamed("node", "x"), "x")
-        deg = both.groupBy(F.col("w").alias("node")).agg(
-            F.count(F.lit(1)).cast("long").alias("core_deg")
+        return (
+            both.groupBy(F.col("w").alias("node")).agg(
+                F.count(F.lit(1)).cast("long").alias("core_deg")
+            ),
         )
-        deg = ckpt(deg)
-        alive = deg.filter(F.col("core_deg") >= k).select("node")
-    out = (
+
+    (deg,) = fixpoint(
+        peel,
+        (nodes.select("node", F.lit(k).cast("long").alias("core_deg")),),
+        max_iter=n_rounds,
+        what="kcore peel",
+    )
+    alive = deg.filter(F.col("core_deg") >= k).select("node")
+    return (
         nodes.join(
             alive.withColumn("__in", F.lit(True)), "node", "left"
         )
@@ -639,7 +632,3 @@ def kcore(
             ).otherwise(F.lit(0)).cast("long").alias("core_deg"),
         )
     )
-    out = ckpt(out)
-    for df in (adj, nodes):
-        df.unpersist()
-    return out

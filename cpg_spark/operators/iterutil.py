@@ -1,7 +1,8 @@
 """Lineage truncation, the one release rule for local checkpoints, and
 the one fixpoint loop behind every iterative operator (CC/SCC/BFS/
 compress in canonicalize.py, scope closures in link.py, DFG slicing in
-stringapprox.py, constant folding in evaluate.py).
+stringapprox.py, constant folding in evaluate.py, PageRank/HITS/label
+propagation/k-core in graphrank.py).
 
 The checkpoint kind follows the SparkContext: a reliable `checkpoint()`
 when it has a checkpoint directory (`spark.checkpoint.dir` or

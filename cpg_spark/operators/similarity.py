@@ -20,6 +20,8 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrays import ordered_sum
+
 LSH_NBITS = 16
 HYPERPLANE_MOD = 997
 
@@ -390,22 +392,6 @@ def kmeans_fit(
         raise ValueError("seed ids must exist")
     e = F.col("embedding")
 
-    def _seq_fold(sort_key: Column, val: Column) -> Column:
-        # sequential left-to-right double sum over sort_key order,
-        # seeded 0.0 — the cross-engine bit-exact fold shape
-        return F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(sort_key.alias("i"), val.alias("v"))
-                    )
-                ),
-                lambda s: s.getField("v"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     for _ in range(n_iter):
         # squared-L2 distance to each centroid, as literal-folded exprs
         assigned = emb.select(
@@ -422,12 +408,12 @@ def kmeans_fit(
             p1 = vals.withColumn(
                 "salt", F.pmod(F.col(id_col), F.lit(n_salts))
             ).groupBy("cell", "dim_idx", "salt").agg(
-                _seq_fold(F.col(id_col), F.col("val")).alias("psum"),
+                ordered_sum(id_col, "val").alias("psum"),
                 F.count(F.lit(1)).alias("pcnt"),
             )
             upd = p1.groupBy("cell", "dim_idx").agg(
                 (
-                    _seq_fold(F.col("salt"), F.col("psum"))
+                    ordered_sum("salt", "psum")
                     / F.sum("pcnt")
                 ).alias("m")
             )

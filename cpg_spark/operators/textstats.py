@@ -19,6 +19,7 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.arrays import ordered_sum
 from ..functions.hashing import char_poly_hash_col, let_col
 
 # token pattern shared with the DuckDB oracle (simple classes — identical
@@ -828,19 +829,7 @@ def lm_bigram_score(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
     )
     per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        (
-            F.aggregate(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("__p")))
-                    ),
-                    lambda s: s.getField("__p"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.count(F.lit(1))
-        ).alias("score"),
+        (ordered_sum("pos", "__p") / F.count(F.lit(1))).alias("score"),
     )
     return (
         docs.select("doc_id")

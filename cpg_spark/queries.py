@@ -23,7 +23,7 @@ from functools import wraps
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.arrays import chunk_array, sorted_pairs
+from .functions.arrays import chunk_array, ordered_sum, sorted_pairs
 from .functions.hashing import (
     CHAR_POLY_P,
     avalanche32_sql,
@@ -1056,7 +1056,6 @@ def q_eog_corpus_reach(spark, sf_dir):
     graphs (connected components / SCC)."""
     from .operators import canonicalize
     from .operators.extract import flag_unreachable_edges
-    from .operators.iterutil import ckpt as _ckpt
 
     docs = t_par(spark, sf_dir, "documents")
     # r7: ONE compact row per document — array<struct<guard, even>> per
@@ -1064,7 +1063,7 @@ def q_eog_corpus_reach(spark, sf_dir):
     # the chunk string (guard = contains; length of the ' '-join =
     # Σlen + k−1), behind a cheap regex pre-filter (never filter on the
     # computed token array — scan-pushdown re-tokenizes single-task)
-    docs_ci = _ckpt(
+    docs_ci = iterutil.ckpt(
         docs.filter(textstats.has_min_tokens(F.col("text"))).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             _chunk_info(F.col("text"), 10).alias("ci"),
@@ -1249,13 +1248,12 @@ def q_eog_dfa_branched(spark, sf_dir):
     violation). Accept = S0. One verdict row per (doc, path); branchy
     docs organically produce paths with different verdicts."""
     from .operators import typestate
-    from .operators.iterutil import ckpt as _ckpt
 
     docs = t_par(spark, sf_dir, "documents")
     # r7: same compact per-doc chunk-info array + positional edge
     # generation as q_eog_corpus_reach — the former hop equi-joins
     # shuffled the chunk table twice to discover dst = src+1/src+2
-    docs_ci = _ckpt(
+    docs_ci = iterutil.ckpt(
         docs.filter(textstats.has_min_tokens(F.col("text"))).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             _chunk_info(F.col("text"), 10).alias("ci"),
@@ -2675,7 +2673,6 @@ def q_ts_weighted_sample(spark, sf_dir):
     the survival draw is the shared content hash, the threshold is
     quality*quality (integer temperature = repeated multiplication, so
     the doubles are bit-identical in the oracle)."""
-    from .operators.iterutil import ckpt as _ckpt
     from .operators.sampling import weighted_sample
 
     # r7: parallel scan width + materialize the scored table before the
@@ -2684,7 +2681,7 @@ def q_ts_weighted_sample(spark, sf_dir):
     # into the single-split scan, re-running the quality kernel
     # single-task (the filter-on-computed rule)
     docs = t_par(spark, sf_dir, "documents")
-    q = _ckpt(textstats.quality_score(docs).select("doc_id", "quality"))
+    q = iterutil.ckpt(textstats.quality_score(docs).select("doc_id", "quality"))
     out = weighted_sample(
         q, key_col="doc_id", weight_col="quality", temperature=2, salt="wq"
     )
@@ -3588,17 +3585,7 @@ def q_sim_pq_trained_cmp(spark, sf_dir):
     run. Returns (n_queries, mean_recall_seeded, mean_recall_trained,
     trained_ge_seeded)."""
     both = q_sim_pq_trained_recall(spark, sf_dir)
-    ordered_mean = lambda c: (  # noqa: E731
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("q_id"), F.col(c)))),
-                lambda s: s.getField(c),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / F.count(F.lit(1))
-    )
+    ordered_mean = lambda c: ordered_sum("q_id", c) / F.count(F.lit(1))  # noqa: E731
     return both.agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
         ordered_mean("recall_seeded").alias("mean_recall_seeded"),
@@ -3796,7 +3783,7 @@ def q_kg_pagerank(spark, sf_dir):
 
 
 def _fold_sql(key: str, val: str) -> str:
-    # sequential float fold, sorted by key — mirrors graphrank._ordered_sum
+    # sequential float fold, sorted by key — mirrors functions.arrays.ordered_sum
     return (
         f"list_reduce(list_prepend(0.0, list({val} ORDER BY {key})), "
         "(x, y) -> x + y)"

@@ -589,6 +589,22 @@ def test_label_propagation_deterministic_communities(spark):
     assert got5["a"] != got5["x"]
 
 
+def test_graph_loops_on_empty_edges(spark):
+    """No edges: every iterative graph operator returns no rows under
+    its usual columns (pagerank and hits must not divide by N = 0)."""
+    from cpg_spark.operators import graphrank
+
+    edges = spark.createDataFrame([], "src string, dst string")
+    for op, cols in (
+        (graphrank.pagerank, ["node", "rank"]),
+        (graphrank.hits, ["node", "authority", "hub"]),
+        (graphrank.label_propagation, ["node", "label"]),
+        (graphrank.kcore, ["node", "in_kcore", "core_deg"]),
+    ):
+        out = op(edges)
+        assert (out.columns, out.collect()) == (cols, []), op.__name__
+
+
 def test_triangle_count_exact_vs_bruteforce(spark):
     """Degree-ordered triangle counting matches per-node brute force on
     seeded random graphs; doubled directions, self-loops, and duplicate

@@ -1,7 +1,8 @@
 """Contract of iterutil.fixpoint, the loop behind every iterative
 operator: one SQL execution per round, superseded rounds released, a
 stop that holds only what its output reads, and the two stop policies
-(must-converge guard, bounded cap)."""
+(must-converge guard, bounded cap); the same contract for graphrank's
+bounded loops."""
 
 import gc
 import warnings
@@ -9,7 +10,7 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
-from cpg_spark.operators import canonicalize, iterutil
+from cpg_spark.operators import canonicalize, graphrank, iterutil
 from cpg_spark.operators.iterutil import HARD_CAP_FACTOR, fixpoint
 
 
@@ -138,3 +139,35 @@ def test_bounded_loop_stops_silently_at_cap(spark):
         warnings.simplefilter("error", RuntimeWarning)
         (out,) = fixpoint(step, state, max_iter=3, what="counter", key=("x",))
     assert out.collect()[0]["x"] == 3
+
+
+# a 6-ring with two chords: every node keeps degree >= 2, so the 2-core
+# is the whole graph in every round
+RING = [(f"n{i}", f"n{(i + 1) % 6}") for i in range(6)] + [("n0", "n3"), ("n1", "n4")]
+
+
+@pytest.mark.parametrize(
+    "op, executions",
+    [
+        (lambda e, n: graphrank.pagerank(e, n_iter=n), lambda n: n + 2),
+        (lambda e, n: graphrank.hits(e, n_iter=n), lambda n: 2 * n + 2),
+        (lambda e, n: graphrank.label_propagation(e, n_iter=n), lambda n: n + 1),
+        (lambda e, n: graphrank.kcore(e, k=2, n_rounds=n), lambda n: n + 1),
+    ],
+    ids=["pagerank", "hits", "label_propagation", "kcore"],
+)
+def test_graph_loops_run_one_execution_per_round(spark, last_execution_id, op, executions):
+    """A direct call runs one SQL execution per round (hits: per
+    half-step) on top of its static frames' checkpoints, and leaves as
+    many RDDs persisted after 6 rounds as after 2: the statics and the
+    last round, never a superseded one."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(RING, "src string, dst string")
+    left = {}
+    for n in (2, 6):
+        p0, x0 = _persisted(sc), last_execution_id()
+        out = op(edges, n)
+        left[n] = len(_persisted(sc) - p0)
+        assert last_execution_id() - x0 == executions(n), n
+        assert out.count() == 6
+    assert left[2] == left[6]
