@@ -102,16 +102,6 @@ def _pairs_frame(spark, pairs, dtype, nullable: bool = True) -> DataFrame:
     )
 
 
-def _unionfind_driver(e: DataFrame) -> DataFrame:
-    """Driver-side union-find for dictionary-sized edge sets. The
-    reference runs Tarjan on the driver unconditionally
-    (Components.kt:97-131); here it is gated behind a size threshold
-    where a collect is strictly cheaper than ~log(n) shuffle rounds —
-    the distributed large-star/small-star path remains the scale path."""
-    roots = _union_roots((r["u"], r["v"]) for r in e.collect())
-    return _pairs_frame(e.sparkSession, sorted(roots.items()), e.schema["u"].dataType)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -122,18 +112,28 @@ def connected_components(
     """(member_id, component_id) for every node appearing in `edges`;
     component_id = lexicographic min member id.
 
-    Edge sets up to `driver_threshold` run as driver-side union-find (a
-    collect beats log(n) shuffle rounds); larger graphs run the
-    alternating-star loop, each iteration checkpointed (see iterutil).
-    Convergence = stable (count, checksum) of the edge set.
+    Edge sets of at most `driver_threshold` non-self-loop rows run as a
+    driver-side union-find: one bounded collect of at most
+    driver_threshold + 1 rows, solved on the driver if they all fit (a
+    collect beats log(n) shuffle rounds; the reference runs Tarjan on
+    the driver unconditionally, Components.kt:97-131). Larger graphs run
+    the alternating-star loop, each iteration checkpointed (see
+    iterutil); convergence = stable (count, checksum) of the edge set.
+    driver_threshold=0 takes no collect and always runs the loop.
     """
-    e, n_edges = counted(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
+        F.col("u") != F.col("v")
     )
-    if n_edges <= driver_threshold:
-        return _unionfind_driver(e)
+    if driver_threshold > 0:
+        # one partition: the bounded read is one job, not a scan that
+        # widens partition by partition until it has enough rows
+        rows = e.coalesce(1).limit(driver_threshold + 1).collect()
+        if len(rows) <= driver_threshold:
+            # a repeated edge unions the same roots again
+            roots = _union_roots(rows)
+            dtype = e.schema["u"].dataType
+            return _pairs_frame(e.sparkSession, sorted(roots.items()), dtype)
+    e = ckpt(e.distinct())
     # layout: AQE's partition coalescing already collapses each round's
     # tiny exchanges for dictionary-sized graphs, so the former explicit
     # nparts repartition (one extra exchange per round) bought nothing —

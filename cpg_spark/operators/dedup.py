@@ -294,23 +294,24 @@ def jaccard_for_pairs(
     """Exact n-gram Jaccard computed ONLY for the given candidate pairs
     (a, b) — the verification step after LSH blocking. Semantically equal
     to jaccard_pairs(same_lang=False) restricted to `pairs` (the given
-    pairs, not lang, define the blocking), but the cost is O(|pairs|)
-    array intersections instead of the O(Σ df²) inverted-index pair
-    enumeration over the whole corpus, which is what makes MinHash-LSH
-    blocking actually pay off at web scale.
+    pairs, not lang, define the blocking), but the work is one row per
+    shingle of each pair's two docs, Σ_{(a,b)∈pairs}(|A| + |B|), instead
+    of the O(Σ df²) inverted-index pair enumeration over the whole
+    corpus, which is what makes MinHash-LSH blocking actually pay off at
+    web scale.
 
-    Shape (r7): the candidate docs' distinct shingles become a CONFINED
-    inverted index (kernel runs only on candidate docs), and |A∩B| is a
-    pairs→index equi-join counted per pair — never a per-pair array
-    intersection (which built a hash set per pair and shipped both full
-    shingle arrays across two exchanges). Only with max_doc_freq does a
-    corpus-wide shuffle appear (document frequency needs the full
-    inverted index). Returns (a, b, jaccard); pairs whose docs have no
+    Shape: the candidate docs' distinct shingles form a CONFINED
+    inverted index (the kernel runs only on candidate docs), joined to
+    both ends of every pair as (a, b, doc_id) rows. One exchange on
+    (a, b) feeds two aggregates: per (a, b, sh) whether A and B hold the
+    shingle, per (a, b) the sums |A|, |B| and |A∩B|. Only with
+    max_doc_freq does a corpus-wide shuffle appear (document frequency
+    needs the full inverted index, checkpointed while the plan is
+    built); otherwise no action runs until the result is read. Returns
+    one (a, b, jaccard) row per distinct pair; pairs whose docs have no
     (surviving) shingles drop out."""
-    cand_ids = (
-        pairs.select(F.col("a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("b").alias("doc_id")))
-        .distinct()
+    ends = pairs.select("a", "b", F.col("a").alias("doc_id")).unionByName(
+        pairs.select("a", "b", F.col("b").alias("doc_id"))
     )
     if max_doc_freq is None:
         # semi-join BEFORE the shingle kernel: only candidate docs pay
@@ -320,49 +321,35 @@ def jaccard_for_pairs(
         # the computed array: the predicate gets pushed below the
         # upstream repartition into the scan, re-running the whole
         # kernel single-task (measured 2.2s -> 30.5s at sf1.0)
-        idx_c = docs.join(cand_ids, "doc_id", "left_semi").select(
+        idx = docs.join(ends, "doc_id", "left_semi").select(
             "doc_id",
-            F.explode(
-                F.array_distinct(_shingle_text_col(n))
-            ).alias("sh"),
+            F.explode(F.array_distinct(_shingle_text_col(n))).alias("sh"),
         )
     else:
-        idx = _df_capped(
-            ckpt(shingle_index(docs, n).drop("lang")), max_doc_freq
+        # the corpus-wide index feeds the document-frequency count and
+        # the join back to it: materialize it once
+        idx = _df_capped(ckpt(shingle_index(docs, n).drop("lang")), max_doc_freq)
+    # each (a, b) row set carries both docs' shingles; the max per
+    # (a, b, sh) also makes a pair listed twice count once
+    held = (
+        idx.join(ends, "doc_id")
+        .repartition("a", "b")
+        .groupBy("a", "b", "sh")
+        .agg(
+            F.max((F.col("doc_id") == F.col("a")).cast("int")).alias("in_a"),
+            F.max((F.col("doc_id") == F.col("b")).cast("int")).alias("in_b"),
         )
-        idx_c = idx.join(cand_ids, "doc_id", "left_semi")
-    # r7 shape: intersection sizes via the candidate-CONFINED inverted
-    # index instead of shipping both docs' full shingle arrays to every
-    # pair row and intersecting per pair (an OpenHashSet build per pair,
-    # arrays crossing two exchanges — measured 32.6s at sf1.0 vs 10.0s
-    # for this join even before the kernel rewrite; results bit-equal).
-    # Work is bounded by Σ_{(a,b)∈pairs}|A| join probes — all codegen.
-    # The confined index feeds THREE consumers (sizes + both join
-    # sides); materialize it once (lineage-truncating checkpoint — the
-    # in-session analog of the index table a 100 TB run would snapshot)
-    # instead of re-running the kernel per consumer.
-    idx_c = ckpt(idx_c)
-    sizes = idx_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a_sh = pairs.join(idx_c.withColumnRenamed("doc_id", "a"), "a")
-    n_common = (
-        a_sh.join(idx_c.select(F.col("doc_id").alias("b"), "sh"), ["b", "sh"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"))
-    nc = F.coalesce(F.col("n_common"), F.lit(0))
+    na, nb, nc = F.col("na"), F.col("nb"), F.col("nc")
     return (
-        pairs.join(sa, "a")
-        .join(sb, "b")
-        .join(n_common, ["a", "b"], "left")
-        .select(
-            "a",
-            "b",
-            (nc.cast("double") / (F.col("na") + F.col("nb") - nc)).alias(
-                "jaccard"
-            ),
+        held.groupBy("a", "b")
+        .agg(
+            F.sum("in_a").alias("na"),
+            F.sum("in_b").alias("nb"),
+            F.sum(F.col("in_a") * F.col("in_b")).alias("nc"),
         )
+        .filter((na > 0) & (nb > 0))
+        .select("a", "b", (nc.cast("double") / (na + nb - nc)).alias("jaccard"))
     )
 
 
@@ -660,7 +647,7 @@ def anchor_chunk_dedup(
         chunks = chunks.unionByName(f)
     # narrow (doc_id, fam, start, end, fp) rows; materialize once — the
     # agg and the join-back below would otherwise each re-run the span
-    # kernel (same contract as jaccard_for_pairs' confined index)
+    # kernel (the same reason jaccard_pairs materializes its index)
     chunks = ckpt(chunks)
 
     # combinable count + min(struct) + equi-join back on (fam, fp) — the

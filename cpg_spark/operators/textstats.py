@@ -96,29 +96,29 @@ def token_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_struct(text: Column) -> Column:
-    """(n_chars_text, stop_hits, quality) as one let-bound struct —
-    shared by quality_score and the curation gate (which inlines it
-    instead of joining the operator's output back on doc_id)."""
+def quality_of_tokens(text: Column, t: Column) -> Column:
+    """(n_chars_text, stop_hits, quality) of `text` from its token array
+    `t` (doc_tokens(text), bound once by the caller)."""
     en = list(LANG_STOPWORDS["en"])
+    n = F.size(t)
+    stop_hits = F.size(F.filter(t, lambda w: w.isin(en)))
+    ttr = F.size(F.array_distinct(t)) / n
+    len_ok = (F.length(text) >= 100) & (F.length(text) <= 20000)
+    score = (
+        len_ok.cast("double") * 0.4
+        + F.least(stop_hits / F.lit(5.0), F.lit(1.0)) * 0.3
+        + F.least(ttr * 2, F.lit(1.0)) * 0.3
+    )
+    return F.struct(
+        F.length(text).alias("n_chars_text"),
+        stop_hits.alias("stop_hits"),
+        score.alias("quality"),
+    )
 
-    def inner(t):
-        n = F.size(t)
-        stop_hits = F.size(F.filter(t, lambda w: w.isin(en)))
-        ttr = F.size(F.array_distinct(t)) / n
-        len_ok = (F.length(text) >= 100) & (F.length(text) <= 20000)
-        score = (
-            len_ok.cast("double") * 0.4
-            + F.least(stop_hits / F.lit(5.0), F.lit(1.0)) * 0.3
-            + F.least(ttr * 2, F.lit(1.0)) * 0.3
-        )
-        return F.struct(
-            F.length(text).alias("n_chars_text"),
-            stop_hits.alias("stop_hits"),
-            score.alias("quality"),
-        )
 
-    return let_col(doc_tokens(text), inner)
+def quality_struct(text: Column) -> Column:
+    """quality_of_tokens as one let-bound struct over text's tokens."""
+    return let_col(doc_tokens(text), lambda t: quality_of_tokens(text, t))
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -134,21 +134,22 @@ def quality_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_hits_array(text: Column) -> Column:
-    """Per-language stopword hit counts (LANG_STOPWORDS order) in one
-    let-bound pass over the token array."""
-
+def lang_hits_of_tokens(t: Column) -> Column:
+    """Per-language stopword hit counts (LANG_STOPWORDS order) of the
+    token array `t`."""
     # NB: never add default args to HOF lambdas — PySpark reads a 2-arg
     # lambda as (element, index) and binds the index to the default.
-    def inner(t):
-        return F.array(
-            *[
-                F.size(F.filter(t, lambda tk: tk.isin(list(words))))
-                for words in LANG_STOPWORDS.values()
-            ]
-        )
+    return F.array(
+        *[
+            F.size(F.filter(t, lambda tk: tk.isin(list(words))))
+            for words in LANG_STOPWORDS.values()
+        ]
+    )
 
-    return let_col(doc_tokens(text), inner)
+
+def lang_hits_array(text: Column) -> Column:
+    """lang_hits_of_tokens in one let-bound pass over text's tokens."""
+    return let_col(doc_tokens(text), lang_hits_of_tokens)
 
 
 def lang_pred_col(hits: Column) -> Column:

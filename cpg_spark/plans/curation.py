@@ -53,16 +53,24 @@ def gate(
     operator-output joins back on doc_id shuffled the whole corpus
     twice to attach columns derivable in the scan (same values:
     quality is NULL for token-less docs exactly as the left join
-    produced)."""
-    quality = F.when(
-        textstats.has_min_tokens(F.col("text")),
-        textstats.quality_struct(F.col("text")).getField("quality"),
-    )
-    pred = let_col(
-        textstats.lang_hits_array(F.col("text")), textstats.lang_pred_col
-    )
-    annotated = docs.withColumn("quality", quality).withColumn(
-        "pred_lang", pred
+    produced). Both come from one let-bound token array, so each
+    document is tokenized once."""
+    text = F.col("text")
+
+    def annotate(t):
+        quality = textstats.quality_of_tokens(text, t).getField("quality")
+        pred = let_col(textstats.lang_hits_of_tokens(t), textstats.lang_pred_col)
+        return F.struct(
+            F.when(F.size(t) > 0, quality).alias("quality"), pred.alias("pred_lang")
+        )
+
+    # the struct is one column so the projection below reads it twice
+    # without re-running the tokenizer
+    annotated = (
+        docs.withColumn("__ann", let_col(textstats.doc_tokens(text), annotate))
+        .withColumn("quality", F.col("__ann.quality"))
+        .withColumn("pred_lang", F.col("__ann.pred_lang"))
+        .drop("__ann")
     )
 
     gate_fail = F.lit(False)
@@ -179,8 +187,9 @@ def curate(
     surv = survivors(gated)
 
     sig = dedup.minhash_signatures(surv)
-    # fan-out point #2: the candidate set feeds both sides of the verify
-    # join — cache so MinHash+banding runs once (EdgeCachePass analog)
+    # fan-out point #2: the verify reads the candidate set once per pair
+    # end, for the candidate-doc semi-join and for the pair-keyed join —
+    # cache so MinHash+banding runs once (EdgeCachePass analog)
     cand = dedup.lsh_candidate_pairs(sig, max_bucket_size=lsh_max_bucket).cache()
     dmap = dup_map(surv, verified_edges(surv, cand, max_doc_freq, near_dup_jaccard))
     lsh_dropped = dedup.lsh_dropped_buckets(sig, max_bucket_size=lsh_max_bucket)

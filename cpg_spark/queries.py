@@ -2814,9 +2814,10 @@ WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= {_JAC_CAP_MIN}
 
 def q_dd_jaccard_verify(spark, sf_dir):
     """The composed near-dup verification step: MinHash-LSH candidate
-    pairs, then exact Jaccard computed ONLY for those pairs (array
-    intersection per candidate — O(|pairs|), never the corpus-wide
-    inverted-index join). This is the curation pipeline's hot path."""
+    pairs, then exact Jaccard computed ONLY for those pairs (one
+    pair-keyed aggregate over both docs' shingles — Σ(|A| + |B|) rows
+    over the pairs, never the corpus-wide inverted-index join). This is
+    the curation pipeline's hot path."""
     docs = t_par(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs)
     # fan-out point (candidates feed the id semi-join AND the pair join):

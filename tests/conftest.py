@@ -30,6 +30,23 @@ def last_execution_id(spark):
     return last
 
 
+@pytest.fixture(scope="session")
+def executions_by_description(spark):
+    """Callable giving the session's SQL executions counted by their
+    description, the job description they started under."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def count() -> dict[str, int]:
+        execs = store.executionsList()
+        counts: dict[str, int] = {}
+        for i in range(execs.size()):
+            desc = execs.apply(i).description()
+            counts[desc] = counts.get(desc, 0) + 1
+        return counts
+
+    return count
+
+
 @pytest.fixture
 def restore_checkpoint_dir(spark):
     """For a test that gives the context a checkpoint directory: put

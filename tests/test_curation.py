@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from cpg_spark.operators import canonicalize, iterutil
 from cpg_spark.plans.curation import CURATION_STAGES, CurationPipeline, curate, gate
 
 BASE = (
@@ -159,6 +160,83 @@ def test_curation_stop_after_returns_the_stages_up_to_it(spark, docs_df, staged_
         assert pipe.ran == [], stop
     with pytest.raises(ValueError, match="verified_edges"):
         CurationPipeline(spark, wh, **kw).run(docs_df, input_token="tok-pin", stop_after="edges")
+
+
+def test_curation_stages_take_no_hidden_action(
+    spark, docs_df, tmp_path, executions_by_description
+):
+    """No curation stage build leaves a persisted RDD (no operator takes
+    a local checkpoint while its plan is built), and verified_edges
+    commits in one SQL execution, its snapshot write. Stages run on
+    their own threads, so each runs under its own job group and its
+    executions are the ones started under that group's description."""
+    sc = spark.sparkContext
+    docs_df.count()  # fill the fixture's own cache first
+    pipe = CurationPipeline(
+        spark, str(tmp_path), run_id="acts", target_langs=("en",), min_quality=0.3,
+        near_dup_jaccard=0.5,
+    )
+    stage, tag = pipe._stage, tmp_path.name
+    added: dict[str, set] = {}
+
+    def watched(name, fingerprint, compute, input_split):
+        def built():
+            before = iterutil.persisted_ids(sc)
+            df = compute()
+            added[name] = iterutil.persisted_ids(sc) - before
+            return df
+
+        sc.setJobGroup(f"{tag}.{name}", f"{tag}.{name}")
+        try:
+            return stage(name, fingerprint, built, input_split)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    pipe._stage = watched
+    out = pipe.run(docs_df, input_token="tok-acts")
+    assert added == {s: set() for s in CURATION_STAGES}
+    assert executions_by_description().get(f"{tag}.verified_edges") == 1
+    assert sorted(r["doc_id"] for r in out["kept"].collect()) == [0, 3]
+
+
+def test_connected_components_driver_path_is_one_action(spark, last_execution_id):
+    """At or under the threshold the edge rows come back in one bounded
+    collect and are solved on the driver; a repeated edge counts toward
+    the threshold but changes no component."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (2, 3), (7, 8), (9, 9)], "a long, b long"
+    )
+    x0 = last_execution_id()
+    cc = canonicalize.connected_components(edges, src="a", dst="b", driver_threshold=4)
+    assert last_execution_id() - x0 == 1
+    assert {tuple(r) for r in cc.collect()} == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+
+
+def test_connected_components_threshold_zero_takes_no_collect(spark, monkeypatch):
+    """driver_threshold=0 always runs the distributed star loop, even on
+    an empty edge set: nothing is collected to the driver."""
+    DataFrame = type(spark.range(1))  # the session's DataFrame class
+    collects = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        collects.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    out = [
+        canonicalize.connected_components(
+            spark.createDataFrame(rows, "src long, dst long"), driver_threshold=0
+        )
+        for rows in ([(1, 2), (2, 3), (5, 4)], [])
+    ]
+    assert collects == []
+    monkeypatch.undo()
+    assert [{tuple(r) for r in df.collect()} for df in out] == [
+        {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)},
+        set(),
+    ]
 
 
 @pytest.mark.parametrize("target_langs,min_quality", [(None, 0.0), (("en",), 0.3)])

@@ -433,6 +433,41 @@ def test_jaccard_for_pairs_no_shared_shingle(spark, docs_df):
     assert len(got) == 1 and got[0]["jaccard"] < 0.2
 
 
+def test_jaccard_for_pairs_repeated_pair_counts_once(spark):
+    """A candidate pair listed twice is one pair: one row, and its
+    shingles are not counted once per listing (7 trigrams each, 4
+    shared: 4 / 10)."""
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog", "en"),
+            (2, "the quick brown fox jumps over a lazy cat", "en"),
+        ],
+        "doc_id long, text string, lang string",
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 2)], "a long, b long")
+    got = [tuple(r) for r in dedup.jaccard_for_pairs(docs, pairs).collect()]
+    assert got == [(1, 2, 0.4)]
+
+
+def test_jaccard_for_pairs_capped_matches_full(spark):
+    """With a document-frequency cap, candidate-confined Jaccard equals
+    the capped corpus-wide Jaccard on that function's pairs: both count
+    doc sizes over the shingles that survive the cap."""
+    import random
+
+    rng = random.Random(5)
+    words = ["w%d" % i for i in range(7)]
+    docs = [(i, " ".join(rng.choice(words) for _ in range(14)), "en") for i in range(16)]
+    df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
+    full = {(r["a"], r["b"]): r["jaccard"]
+            for r in dedup.jaccard_pairs(df, same_lang=False, max_doc_freq=4).collect()}
+    assert full and any(j < 1.0 for j in full.values())
+    pairs_df = spark.createDataFrame(sorted(full), "a long, b long")
+    confined = {(r["a"], r["b"]): r["jaccard"]
+                for r in dedup.jaccard_for_pairs(df, pairs_df, max_doc_freq=4).collect()}
+    assert confined == full
+
+
 def test_lsh_bucket_cap_drops_mega_bucket(spark):
     """A planted mega-bucket (many identical docs) is excluded by the cap
     and reported by the audit twin; a small genuine dup pair survives."""

@@ -139,19 +139,9 @@ def test_empty_stage_lineage_is_one_zero_row(spark, pages_df):
     assert rows == [(0, 0)]
 
 
-def _executions_by_description(spark) -> dict[str, int]:
-    """SQL executions of the session's status store, counted by their
-    description — the job description they started under."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
-    counts: dict[str, int] = {}
-    for i in range(execs.size()):
-        desc = execs.apply(i).description()
-        counts[desc] = counts.get(desc, 0) + 1
-    return counts
-
-
-def test_stage_commit_is_one_execution_and_keeps_no_blocks(spark, pages_df, alias_df):
+def test_stage_commit_is_one_execution_and_keeps_no_blocks(
+    spark, pages_df, alias_df, executions_by_description
+):
     """Committing a map stage runs one SQL execution (the snapshot
     write), and a stage commit keeps no blocks: a stage's build persists
     only blocks its own frame reads (the local checkpoints an operator
@@ -191,7 +181,7 @@ def test_stage_commit_is_one_execution_and_keeps_no_blocks(spark, pages_df, alia
     # releases only what was persisted after its own snapshot
     assert iterutil.persisted_ids(sc) - before == set()
     assert unread == {s: set() for s in STAGES}
-    assert _executions_by_description(spark).get(f"{tag}.sentences") == 1
+    assert executions_by_description().get(f"{tag}.sentences") == 1
 
 
 def test_commit_release_keeps_what_frames_in_flight_read(
