@@ -11,7 +11,7 @@ prioritization, and triple-confidence weighting downstream.
 The four iterative operators (pagerank, hits, label_propagation, kcore)
 are bounded `iterutil.fixpoint` loops: their static edge/node frames
 are checkpointed once before the loop, each round checkpoints its state
-and releases the one it replaced, and the caller's release boundary
+and releases the one it replaced, and the caller's release scope
 frees the statics (iterutil module docstring).
 
 Determinism contract (the repo's oracle rule): ranks are IEEE doubles,

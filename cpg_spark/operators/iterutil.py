@@ -1,6 +1,6 @@
-"""Lineage truncation, the one release rule for local checkpoints, and
-the one fixpoint loop behind every iterative operator (CC/SCC/BFS/
-compress in canonicalize.py, scope closures in link.py, DFG slicing in
+"""Lineage truncation, release scopes for local checkpoints, and the
+one fixpoint loop behind every iterative operator (CC/SCC/BFS/compress
+in canonicalize.py, scope closures in link.py, DFG slicing in
 stringapprox.py, constant folding in evaluate.py, PageRank/HITS/label
 propagation/k-core in graphrank.py).
 
@@ -9,24 +9,20 @@ when it has a checkpoint directory (`spark.checkpoint.dir` or
 `sc.setCheckpointDir`, the cluster setting — an executor loss mid-loop
 must not lose the only copy of a round), else `localCheckpoint()`.
 
-The release rule (`release`): a local checkpoint taken after a
-snapshot (`persisted_ids`) is released as soon as no handed-out frame
-reads it. It runs at three boundaries — each `fixpoint` round and stop,
-each registry entry's return (queries.py) and each stage commit
-(plans/pipeline.py) — and operators carry no release code: a direct
-caller of an operator owns the checkpoints of the frame it is handed.
-
-The snapshot is of the process-wide persisted set, so the rule assumes
-that nothing else takes or frees checkpoints between the snapshot and
-the release. Pipeline stages that commit concurrently keep to that:
-their builds (with every `fixpoint` inside them) run one at a time, and
-a stage commit passes the frames other stages are still writing as
-live, so it frees none of their checkpoints.
+The release rule (`scope`): `ckpt` records each local checkpoint in the
+innermost release scope open on its thread (a context variable, so
+concurrent stages never see each other's). At its boundary a scope
+releases what no frame it keeps reads and hands the rest to the scope
+around it (with none, to the caller); a scope left by an exception
+releases everything. Each `fixpoint`, registry entry (queries.py) and
+stage commit (plans/pipeline.py) is a scope, so operators carry no
+release code.
 """
 
 from __future__ import annotations
 
 import warnings
+from contextvars import ContextVar
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, Observation
@@ -44,13 +40,17 @@ Step = Callable[[tuple[DataFrame, ...], int], Sequence[DataFrame]]
 
 def ckpt(df: DataFrame) -> DataFrame:
     """Eagerly materialize `df` and truncate its lineage."""
-    if df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        return df.localCheckpoint()
-    return df.checkpoint()
+    sc = df.sparkSession.sparkContext
+    if not sc._jsc.sc().getCheckpointDir().isEmpty():
+        return df.checkpoint()
+    out = df.localCheckpoint()
+    if (inner := _SCOPE.get()) is not None:
+        inner.sc, inner.held = sc, inner.held | _reads([out])
+    return out
 
 
 def persisted_ids(sc) -> set[int]:
-    """Ids of the context's persisted RDDs: a snapshot for `release`."""
+    """Ids of the context's persisted RDDs (to observe what a run left)."""
     ids = sc._jsc.sc().getPersistentRDDs().keys().mkString(",")
     return {int(i) for i in ids.split(",") if i}
 
@@ -71,21 +71,39 @@ def _reads(frames: Sequence[DataFrame]) -> set[int]:
     return ids
 
 
-def _release(sc, ids: set[int]) -> None:
-    rdds = sc._jsc.getPersistentRDDs()
-    for i in ids:
-        rdd = rdds.get(i)
-        # only local checkpoint blocks: a user frame that was cached
-        # elsewhere but first materialized after the snapshot stays
-        if rdd is not None and rdd.rdd().isLocallyCheckpointed():
-            rdd.unpersist(False)
+class scope:
+    """A release scope (module docstring) over the body of `with
+    scope() as s:`. Releasing runs no Spark job; reliable checkpoint
+    files are left to Spark's ContextCleaner."""
+
+    def __enter__(self) -> scope:
+        self.held, self.kept, self.sc = set(), set(), None
+        self._token = _SCOPE.set(self)
+        return self
+
+    def keep(self, *frames: DataFrame) -> None:
+        """Release now what none of `frames` reads; what they read goes
+        to the enclosing scope at the boundary."""
+        self.kept = _reads(frames)
+        self._release()
+
+    def _release(self) -> None:
+        for i in self.held - self.kept:
+            rdd = self.sc._jsc.getPersistentRDDs().get(i)
+            if rdd is not None:
+                rdd.unpersist(False)
+        self.held &= self.kept
+
+    def __exit__(self, exc_type, *_) -> None:
+        _SCOPE.reset(self._token)
+        if exc_type is not None:
+            self.kept = set()
+        self._release()
+        if (outer := _SCOPE.get()) is not None and self.held:
+            outer.sc, outer.held = self.sc, outer.held | self.held
 
 
-def release(sc, since: set[int], *live: DataFrame) -> None:
-    """Release every local checkpoint persisted after the snapshot
-    `since` that none of the `live` frames reads. Runs no Spark job;
-    reliable checkpoint files are left to Spark's ContextCleaner."""
-    _release(sc, persisted_ids(sc) - since - _reads(live))
+_SCOPE: ContextVar[scope | None] = ContextVar("release_scope", default=None)
 
 
 def _probe(df: DataFrame, metrics: list) -> tuple[DataFrame, dict]:
@@ -123,45 +141,44 @@ def fixpoint(
     a stop the other frames come back unmaterialized over the previous
     round's checkpoints.
 
-    After each round and at the stop the release rule (module
-    docstring) keeps only the checkpoints the state in hand reads; the
-    caller owns those a stopped loop hands back.
+    The loop is a release scope (module docstring) that each round
+    keeps the new state in and the stop its output.
 
     At `max_iter` rounds a bounded loop (hop/depth/round caps) returns
     silently; a `must_converge` loop warns, keeps going, and raises at
     `max_iter * HARD_CAP_FACTOR`.
     """
     state = tuple(state)
-    sc = state[0].sparkSession.sparkContext
     metrics = [F.count(F.lit(1)).alias("n")]
     if key is not None:
         metrics.append(F.coalesce(F.bit_xor(F.xxhash64(*key)), F.lit(0)).alias("h"))
-    since, prev, i = persisted_ids(sc), None, 0
-    while must_converge or i < max_iter:
-        i += 1
-        head, *rest = step(state, i)
-        head, cur = _probe(head, metrics)
-        if cur["n"] == 0 and fallback is not None:
-            head, *rest = fallback(state, i)
+    prev, i = None, 0
+    with scope() as loop:
+        while must_converge or i < max_iter:
+            i += 1
+            head, *rest = step(state, i)
             head, cur = _probe(head, metrics)
-        if cur["n"] == 0 or (key is not None and cur == prev):
-            release(sc, since, head, *rest)
-            return (head, *rest)
-        state = (head, *(ckpt(f) for f in rest))
-        release(sc, since, *state)
-        prev = cur
-        if must_converge and i == max_iter:
-            warnings.warn(
-                f"{what}: not converged after max_iter={max_iter} rounds; "
-                "continuing to the guaranteed fixpoint",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-        if must_converge and i >= max_iter * HARD_CAP_FACTOR:
-            raise RuntimeError(
-                f"{what}: no fixpoint after {i} rounds "
-                f"(hard cap {max_iter} x {HARD_CAP_FACTOR})"
-            )
+            if cur["n"] == 0 and fallback is not None:
+                head, *rest = fallback(state, i)
+                head, cur = _probe(head, metrics)
+            if cur["n"] == 0 or (key is not None and cur == prev):
+                loop.keep(head, *rest)
+                return (head, *rest)
+            state = (head, *(ckpt(f) for f in rest))
+            loop.keep(*state)
+            prev = cur
+            if must_converge and i == max_iter:
+                warnings.warn(
+                    f"{what}: not converged after max_iter={max_iter} rounds; "
+                    "continuing to the guaranteed fixpoint",
+                    RuntimeWarning,
+                    stacklevel=3,
+                )
+            if must_converge and i >= max_iter * HARD_CAP_FACTOR:
+                raise RuntimeError(
+                    f"{what}: no fixpoint after {i} rounds "
+                    f"(hard cap {max_iter} x {HARD_CAP_FACTOR})"
+                )
     return state
 
 

@@ -153,7 +153,7 @@ def curate(
     excluded by lsh_max_bucket (empty when uncapped), and an
     ``unpersist()`` callable. The gate and candidate-pair stages are
     cached; the CALLER owns that cache's lifetime, as it owns any local
-    checkpoint the returned frames read (iterutil.release) — call
+    checkpoint the returned frames read (iterutil.scope) — call
     ``result["unpersist"]()`` once the outputs are materialized, or
     cached blocks accumulate in executor storage across repeated
     invocations in a long-lived session.

@@ -12,10 +12,10 @@ TranslationConfiguration.kt:663-704, made explicit); an arrow reads
      triples/triples_agg/nodes: salted materialize)
 
 Each stage starts once the stages it reads have committed, so
-independent stages commit concurrently: `components` overlaps
+independent stages build and commit concurrently: `components` overlaps
 sentences -> mentions -> links, and `nodes` overlaps triples ->
 triples_agg. The critical path is sentences -> mentions -> links ->
-triples -> triples_agg.
+triples -> triples_agg; no stage waits on another's build.
 
 Explicit repartitioning sits between the map-heavy extract phase and the
 shuffle-heavy canonicalize/merge phase (north_rule requirement): extract
@@ -32,7 +32,6 @@ barrier and the next run resumes from the last committed snapshot.
 from __future__ import annotations
 
 import hashlib
-import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,13 +46,6 @@ from ..synth import TARGET_LANGS
 PIPELINE_VERSION = "1"
 
 STAGES = ("sentences", "mentions", "links", "components", "triples", "triples_agg", "nodes")
-
-# The release rule diffs the process-wide persisted set against a
-# snapshot, so concurrent stages share one lock around every build (and
-# the hidden actions and fixpoint releases in it) and every commit
-# release, and the frames built but not yet written stay live.
-_BUILD = threading.Lock()
-_IN_FLIGHT: list[DataFrame] = []
 
 
 class StagedPipeline:
@@ -77,7 +69,7 @@ class StagedPipeline:
         name and its upstream stages' fingerprints. Each stage runs on
         its own driver thread, which inherits the caller's Spark local
         properties (job group, description), as soon as its upstream
-        stages have committed, so independent stages commit
+        stages have committed, so independent stages build and commit
         concurrently and Spark interleaves their jobs; ``build(o)``
         gets the committed frames of the stage's transitive upstream
         only, so reading any other stage raises ``KeyError``. Once every
@@ -124,35 +116,20 @@ class StagedPipeline:
         frame is not cached, the lineage counts come from the written
         files' footers, and the driver writes the lineage rows.
 
-        Builds are serialized (one lock for every pipeline in the
-        process) and writes are not: a build, with the actions it
-        takes, runs beside other stages' writes but never beside
-        another build. The commit is a release boundary
-        (iterutil.release) whose live frames are the frames built but
-        not yet written: the snapshot is read back from its files, so
-        once the write returns every local checkpoint taken since this
-        build began is released unless another stage's write still
-        reads it. A snapshot write persists nothing, so the rule stays
-        exact. The lineage ``wall_ms`` runs from this call, i.e. from
-        the moment the stage's upstream stages have committed, and
-        includes any wait for the build lock."""
+        The build and the write share one release scope
+        (iterutil.scope): the snapshot is read back from its files, so
+        every local checkpoint the build took is released once the write
+        returns or either raises, and other stages' builds and commits
+        never wait on this one. The lineage ``wall_ms`` runs from this
+        call, i.e. from the moment the stage's upstream has committed."""
         if self.catalog.has_snapshot(name, fingerprint):
             self.skipped.append(name)
             return self.catalog.read(self.spark, name)
         timer = StageTimer()
-        sc = self.spark.sparkContext
-        with _BUILD:
-            since = iterutil.persisted_ids(sc)
-            built = compute()
-            _IN_FLIGHT.append(built)
-        try:
+        with iterutil.scope():
             manifest = self.catalog.write(
-                built, name, fingerprint, stage=name, run_id=self.run_id
+                compute(), name, fingerprint, stage=name, run_id=self.run_id
             )
-        finally:
-            with _BUILD:
-                _IN_FLIGHT.remove(built)
-                iterutil.release(sc, since, *_IN_FLIGHT)
         df = self.catalog.read(self.spark, name)
         append_lineage(
             self.spark,

@@ -11,8 +11,9 @@ bit-for-bit by the oracle; timestamps are emitted as formatted strings.
 Registry shape: QUERIES[name] = (fn(spark, sf_dir) -> DataFrame,
 oracle_sql | None). A None oracle means the driver records a weaker
 rows-only check (reserved for genuinely non-SQL-expressible ops).
-Each registered fn is a release boundary: the returned frame holds
-only the local checkpoints it reads, and its caller owns those.
+Each registered fn is a release scope (iterutil.scope): the returned
+frame holds only the local checkpoints it reads, and its caller owns
+those.
 """
 
 from __future__ import annotations
@@ -5609,15 +5610,15 @@ QUERIES.update({
 
 
 def _releasing(fn: Callable[[SparkSession, str], DataFrame]):
-    """`fn` as a release boundary (iterutil.release): the local
-    checkpoints it takes and its returned frame does not read are
-    released before the frame is handed out."""
+    """`fn` as a release scope (iterutil.scope): the local checkpoints
+    it takes and its returned frame does not read are released before
+    the frame is handed out, and all of them if it raises."""
 
     @wraps(fn)
     def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-        since = iterutil.persisted_ids(spark.sparkContext)
-        df = fn(spark, sf_dir)
-        iterutil.release(spark.sparkContext, since, df)
+        with iterutil.scope() as s:
+            df = fn(spark, sf_dir)
+            s.keep(df)
         return df
 
     return entry

@@ -36,21 +36,20 @@ def main() -> int:
         if only and name not in only:
             continue
         # one entry's checkpoints are released before the next starts
-        since = iterutil.persisted_ids(sc)
-        if name not in oracles:
-            n = fn(spark, sf_dir).count()
-            print(f"ok?  {name}: rows-only check, {n} rows")
-        else:
-            try:
-                diag = compare_query(spark, con, fn, oracles[name], sf_dir)
-            except Exception as e:
-                diag = f"error: {e}"
-            if diag is None:
-                print(f"PASS {name}")
+        with iterutil.scope():
+            if name not in oracles:
+                n = fn(spark, sf_dir).count()
+                print(f"ok?  {name}: rows-only check, {n} rows")
             else:
-                failures.append(name)
-                print(f"FAIL {name}: {diag}")
-        iterutil.release(sc, since)
+                try:
+                    diag = compare_query(spark, con, fn, oracles[name], sf_dir)
+                except Exception as e:
+                    diag = f"error: {e}"
+                if diag is None:
+                    print(f"PASS {name}")
+                else:
+                    failures.append(name)
+                    print(f"FAIL {name}: {diag}")
     print(f"persisted RDDs after the sweep: {len(iterutil.persisted_ids(sc))}")
     spark.stop()
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))

@@ -133,6 +133,23 @@ def test_must_converge_raises_at_hard_cap(spark):
                      must_converge=True)
 
 
+def test_failed_round_releases_the_loop_checkpoints(spark):
+    """A step that raises in round 2 leaves no block behind, round 1's
+    checkpoint included."""
+    sc = spark.sparkContext
+    count_up, state = _counter(spark)
+
+    def step(s, i):
+        if i == 2:
+            raise RuntimeError("round 2 failed")
+        return count_up(s, i)
+
+    before = iterutil.persisted_ids(sc)
+    with pytest.raises(RuntimeError, match="round 2 failed"):
+        fixpoint(step, state, max_iter=5, what="failing")
+    assert iterutil.persisted_ids(sc) - before == set()
+
+
 def test_bounded_loop_stops_silently_at_cap(spark):
     step, state = _counter(spark)
     with warnings.catch_warnings():

@@ -185,9 +185,7 @@ def test_fixture_entries_read_local_relations(spark, monkeypatch, name):
         return built[-1]
 
     monkeypatch.setattr(spark, "createDataFrame", recording)
-    sc = spark.sparkContext
-    since = iterutil.persisted_ids(sc)
-    try:
+    with iterutil.scope():
         df = QUERIES[name][0](spark, SF)
         assert built, "no fixture table built"
         for fixture in built:
@@ -200,8 +198,6 @@ def test_fixture_entries_read_local_relations(spark, monkeypatch, name):
         for leaf, kind in zip(leaves, kinds):
             if kind == "LogicalRDD":
                 assert leaf.rdd().isLocallyCheckpointed(), kinds
-    finally:
-        iterutil.release(sc, since)
 
 
 def test_local_frame_schema_and_rows(spark):

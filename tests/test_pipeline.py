@@ -147,10 +147,10 @@ def test_stage_commit_is_one_execution_and_keeps_no_blocks(
     only blocks its own frame reads (the local checkpoints an operator
     takes while its plan is built), and those are released once the
     snapshot is written, so the run ends holding no block it persisted.
-    Stages commit concurrently, so each stage runs under its own job
-    group and its executions are the ones started under that group's
-    description; builds are serialized, so the blocks a build adds are
-    its own."""
+    Stages build and commit concurrently, so each stage runs under its
+    own job group and its executions are the ones started under that
+    group's description, and a build's checkpoints are read from its
+    stage's own release scope."""
     sc = spark.sparkContext
     pages_df.count(), alias_df.count()  # fill the fixtures' own caches first
     wh = tempfile.mkdtemp(prefix="kgwh_")
@@ -160,9 +160,8 @@ def test_stage_commit_is_one_execution_and_keeps_no_blocks(
 
     def watched(name, fingerprint, compute, input_split):
         def built():
-            before = iterutil.persisted_ids(sc)
             df = compute()
-            unread[name] = iterutil.persisted_ids(sc) - before - iterutil._reads([df])
+            unread[name] = iterutil._SCOPE.get().held - iterutil._reads([df])
             return df
 
         sc.setJobGroup(f"{tag}.{name}", f"{tag}.{name}")
@@ -235,6 +234,33 @@ def test_commit_release_keeps_what_frames_in_flight_read(
     assert iterutil.persisted_ids(sc) - before == set()
 
 
+def test_commit_does_not_wait_on_another_build(spark, pages_df, alias_df, corpus):
+    """`components`' build is held until `sentences` has committed: a
+    commit that waited on another stage's build would never come."""
+    sc = spark.sparkContext
+    pages_df.count(), alias_df.count()  # fill the fixtures' own caches first
+    pipe = KgPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="nowait")
+    stage = pipe._stage
+    committed = threading.Event()
+
+    def held(name, fingerprint, compute, input_split):
+        def build():
+            if name == "components":
+                assert committed.wait(60), "sentences did not commit"
+            return compute()
+
+        out = stage(name, fingerprint, build, input_split)
+        if name == "sentences":
+            committed.set()
+        return out
+
+    before = iterutil.persisted_ids(sc)
+    pipe._stage = held
+    out = pipe.run(pages_df, alias_df, input_token="tok-nowait")
+    assert _triple_set(out["triples"]) == _golden_set(corpus)
+    assert iterutil.persisted_ids(sc) - before == set()
+
+
 def test_independent_stages_overlap(spark, pages_df, alias_df, corpus):
     """`components` reads only the alias dictionary, so it commits while
     `sentences` waits for it; run one after another, the stages would
@@ -286,6 +312,22 @@ def test_failed_stage_raises_after_the_stages_in_flight(spark, pages_df, alias_d
     assert _triple_set(out["triples"]) == _golden_set(corpus)
 
 
+def test_failed_build_releases_its_checkpoints(spark):
+    """A build that raises after taking a local checkpoint leaves no
+    block behind."""
+    sc = spark.sparkContext
+
+    def broken(o):
+        iterutil.ckpt(spark.range(10))
+        raise RuntimeError("build failed")
+
+    pipe = StagedPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="leak")
+    before = iterutil.persisted_ids(sc)
+    with pytest.raises(RuntimeError, match="build failed"):
+        pipe._run((("a", (), broken),), ("tok-leak",), "tok-leak", None)
+    assert iterutil.persisted_ids(sc) - before == set()
+
+
 def test_build_reads_only_its_upstream(spark):
     """A build is handed the frames of its transitive upstream only, so
     reading another stage is a KeyError, not a race."""
@@ -302,17 +344,36 @@ def test_build_reads_only_its_upstream(spark):
 
 
 def test_many_concurrent_stages_keep_their_checkpoints(spark):
-    """More concurrent stages than cores, each built over a local
-    checkpoint of its own, with a short thread switch interval: every
-    write must still find its checkpoint (a commit that released
-    another stage's would fail that stage's write), and the run ends
-    holding no block it persisted."""
+    """More concurrent stages than cores, with a short thread switch
+    interval: half the builds take one local checkpoint of their own,
+    half run a short bounded `fixpoint` that checkpoints every round.
+    Every write must still find its checkpoint (a commit that released
+    another stage's would fail that stage's write), each loop keeps only
+    its last round and hands it to its own stage's scope, and the run
+    ends holding no block it persisted."""
     sc = spark.sparkContext
+    handed: dict[str, tuple] = {}
 
-    def build(i):
-        return lambda o: iterutil.ckpt(spark.range(40).selectExpr(f"id * {i} AS v")).filter("v % 3 = 0")
+    def negate(state, _):
+        return (state[0].selectExpr("-v AS v"),)
 
-    dag = tuple((f"s{i}", (), build(i)) for i in range(8))
+    def loop(df):
+        # four rounds of negation give back the input rows
+        return iterutil.fixpoint(negate, (df,), max_iter=4, what="negate")[0]
+
+    def build(name, make, i):
+        def run(o):
+            df = make(spark.range(40).selectExpr(f"id * {i} AS v"))
+            handed[name] = (set(iterutil._SCOPE.get().held), iterutil._reads([df]))
+            return df.filter("v % 3 = 0")
+
+        return run
+
+    dag = tuple(
+        (f"{kind}{i}", (), build(f"{kind}{i}", make, i))
+        for kind, make in (("s", iterutil.ckpt), ("f", loop))
+        for i in range(8)
+    )
     pipe = StagedPipeline(spark, tempfile.mkdtemp(prefix="kgwh_"), run_id="stress")
     before = iterutil.persisted_ids(sc)
     out: dict = {}
@@ -329,7 +390,12 @@ def test_many_concurrent_stages_keep_their_checkpoints(spark):
     assert not runner.is_alive()
     assert pipe.ran == [name for name, _, _ in dag]
     got = {name: sorted(r["v"] for r in df.collect()) for name, df in out.items()}
-    assert got == {f"s{i}": sorted(v * i for v in range(40) if v * i % 3 == 0) for i in range(8)}
+    assert got == {
+        f"{kind}{i}": sorted(v * i for v in range(40) if v * i % 3 == 0)
+        for kind in "sf"
+        for i in range(8)
+    }
+    assert all(len(held) == 1 and held == reads for held, reads in handed.values()), handed
     assert iterutil.persisted_ids(sc) - before == set()
 
 
